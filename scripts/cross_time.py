@@ -14,44 +14,25 @@ Spark medians ~7x in one measurement — see the verify skill notes).
 NOT part of the shipped library.
 """
 import json
-import os
 import statistics
 import sys
-import time
 
-import duckdb
-
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+from duck_time import time_query
+from oracle_check import connect
 
 
 def main():
     sf_dir, out_dir, bench_json = sys.argv[1], sys.argv[2], sys.argv[3]
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     bench = json.load(open(bench_json))["queries"]
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        # multipart fixture mirror / ScaleFixture write tables as
-        # DIRECTORIES of part files
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * "
-                    f"FROM read_parquet('{path}')")
+    con = connect(sf_dir)
     rows = []
     for name in sorted(oracle):
         if name not in bench or bench[name] < 0:
             continue
         sql = oracle[name]
         try:
-            con.execute(sql).fetchall()  # cold, discarded
-            runs = []
-            for _ in range(5):
-                t0 = time.time()
-                con.execute(sql).fetchall()
-                runs.append(time.time() - t0)
-            duck = statistics.median(runs)
+            duck = statistics.median(time_query(con, sql))
         except Exception as e:
             print(f"SKIP {name}: duckdb error: {e}", file=sys.stderr)
             continue

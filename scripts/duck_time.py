@@ -19,35 +19,31 @@ import statistics
 import sys
 import time
 
-import duckdb
+from oracle_check import connect
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+
+def time_query(con, sql, n_runs=5, cold=True):
+    """Run `sql` once discarded (if `cold`), then `n_runs` timed runs;
+    return the list of wall seconds per timed run."""
+    if cold:
+        con.execute(sql).fetchall()
+    runs = []
+    for _ in range(n_runs):
+        t0 = time.time()
+        con.execute(sql).fetchall()
+        runs.append(time.time() - t0)
+    return runs
 
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        # ScaleFixture/Spark write tables as DIRECTORIES of parts
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * "
-                    f"FROM read_parquet('{path}')")
+    con = connect(sf_dir)
     n_runs = int(os.environ.get("DUCK_RUNS", "5"))
     cold = os.environ.get("DUCK_COLD", "1") != "0"
     for name in (names or sorted(oracle)):
-        sql = oracle[name]
-        if cold:
-            con.execute(sql).fetchall()  # cold, discarded
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            con.execute(sql).fetchall()
-            runs.append(time.time() - t0)
+        runs = time_query(con, oracle[name], n_runs, cold)
         print(f"{name}: {statistics.median(runs):.2f}s "
               f"(runs {' '.join(f'{r:.2f}' for r in runs)})",
               flush=True)

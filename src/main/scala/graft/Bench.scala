@@ -56,37 +56,39 @@ object Bench {
     }
   }
 
+  /** One line naming why `t` failed: its class and message (first 300
+    * chars, newlines folded) and the first `graft.` stack frame, looked
+    * up from the root cause outward so the frame is the program code
+    * nearest the fault rather than the main that called it.
+    */
+  def describe(t: Throwable): String = {
+    val msg = String.valueOf(t.getMessage).replaceAll("\\s*\n\\s*", " ")
+      .take(300)
+    val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val frame = chain.reverse.flatMap(_.getStackTrace)
+      .find(_.getClassName.startsWith("graft."))
+      .map(_.toString).getOrElse("<no graft frame>")
+    s"${t.getClass.getName}: $msg @ $frame"
+  }
+
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in an unescaped string would make a
+    * reader's json.load fail on the whole artifact.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val rawDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val producer = sys.env.getOrElse("SPARK_GRAFT_PRODUCER", "driver")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r20 (guide §2.2/§2.5): AQE's coalescer merges post-shuffle
-      // partitions up to minPartitionSize (default 1 MiB) even when the
-      // rows carry CPU-heavy work — on this suite that serialized whole
-      // window/sort/verify stages onto 1-4 cores (q25's 100k-event
-      // session window ran as ONE task). 128 KiB keeps small-but-hot
-      // stages parallel (measured: q25 0.65→0.34 s, q26 0.62→0.36,
-      // x12 1.33→0.92 warm mins). Scale-neutral: at deployment scale
-      // every healthy partition is far above either floor and the
-      // 64 MiB advisory governs; env-parameterised for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "131072"))
-      // r21 (guide §2.3): shuffle/spill codec, env-parameterised. The
-      // local default stays Spark's lz4 — at sf0.1 shuffle bytes are
-      // too small for the codec to matter and the driver's bench must
-      // stay comparable; the 10× scale-fixture experiment
-      // (BENCH_LOCAL.md r21) is what justifies a cluster's choice.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench")
 
     val singleLayout = sys.env.get("SPARK_GRAFT_FIXTURE").contains("single")
     val (sfDir, layout) =
@@ -149,7 +151,8 @@ object Bench {
     }
 
     final case class Row(name: String, min: Double, runs: Vector[Double],
-        cpuRuns: Vector[Double], rerun: Boolean)
+        cpuRuns: Vector[Double], rerun: Boolean,
+        error: Option[String] = None)
     def measure(fn: (SparkSession, String) => DataFrame,
         warm: Int): Vector[(Double, Double)] = {
       // isolate queries from each other's leftovers: in local mode the
@@ -182,8 +185,10 @@ object Bench {
           Row(name, math.min(firstMin, again.tail.map(_._1).min),
             all.map(_._1), all.map(_._2), true)
         } else Row(name, firstMin, first.map(_._1), first.map(_._2), false)
-      } catch { case _: Throwable =>
-        Row(name, -1.0, Vector.empty, Vector.empty, false) }
+      } catch { case e: Throwable =>
+        val why = describe(e)
+        System.err.println(s"[bench] $name failed: $why")
+        Row(name, -1.0, Vector.empty, Vector.empty, false, Some(why)) }
     }
 
     def fmt(v: Double): String =
@@ -206,7 +211,9 @@ object Bench {
             r.cpuRuns.map(fmt).mkString(",") + "]").mkString("{", ",", "}")
           val re = rows.filter(_.rerun).map("\"" + _.name + "\"")
             .mkString("[", ",", "]")
-          s""","runs":$rr,"cpu_runs":$cr,"reruns":$re"""
+          val er = rows.flatMap(r => r.error.map(e =>
+            "\"" + r.name + "\":" + jsonString(e))).mkString("{", ",", "}")
+          s""","runs":$rr,"cpu_runs":$cr,"reruns":$re,"errors":$er"""
         }
       header + s""""queries":$qs,"sf":"$rawDir"$runsPart}"""
     }
@@ -222,7 +229,8 @@ object Bench {
         java.nio.file.Files.move(tmp, dir.resolve(name),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $name: ${describe(e)}") }
     if (args.isEmpty) {
       // full suite: round-stamped durable artifact. Round = one past the
       // newest driver-written BENCH_r{N}.json (the driver writes r{N}

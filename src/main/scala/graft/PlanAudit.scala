@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints physical plans for representative queries — the scale-audit
   * loop: is the filter pushed to the scan, is the projection pruned, are
   * dimension joins broadcast, how wide are the codegen spans.
@@ -14,20 +12,7 @@ object PlanAudit {
     val rest = args.filterNot(_ == "-exec")
     val sfDir =
       if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's AQE coalesce floor (r20) so printed finalized
-      // plans carry the bench's partition decisions
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-plan-audit")
     val names =
       if (rest.length > 1) rest.drop(1).toSeq
       else Seq("q1_pricing_summary", "q2_project_filter", "q5_multiway_join",

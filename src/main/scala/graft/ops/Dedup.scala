@@ -132,7 +132,7 @@ object Dedup {
     // checkpoint blocks — a lazy localCheckpoint of `banded` raised
     // x12's warm suite CPU 7.2 → 11.6 s (wall 1.33 → 1.87) and x50's
     // 12.9 → 20.2 s. The probe stage, not the signature kernel,
-    // dominates this family (StageAudit r20).
+    // dominates this family (r20 per-stage CPU audit).
     val banded = bandedSignatures(docs, idCol, tokenSetCol, numHashes,
       bands, blockCol)
     val a = banded.select(col("block"), col("band_id"), col("band_hash"),

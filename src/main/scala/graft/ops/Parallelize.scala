@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.CodegenSupport
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 
-/** Degenerate-scan rescue for CPU-bound kernels (r17, found by
-  * `graft.tools.StageAudit`): a single small Parquet file with one
+/** Degenerate-scan rescue for CPU-bound kernels (r17, found by a
+  * per-stage task/CPU audit): a single small Parquet file with one
   * row group is INDIVISIBLE — `maxPartitionBytes` cannot split inside
   * a row group — so a scan of it yields ONE partition and every
   * expensive per-row kernel downstream (MinHash signatures, shingle

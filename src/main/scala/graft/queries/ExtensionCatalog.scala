@@ -4325,7 +4325,7 @@ object ExtensionCatalog {
         val assets = Multimodal.syntheticQuadImages(t(s, dir, "documents"))
         // barrier: `hashes` feeds the group aggregate AND the re-join —
         // without it the encode+decode codec pass ran TWICE (r17
-        // StageAudit: two ~3 s serial stages)
+        // per-stage audit: two ~3 s serial stages)
         val hashes = Multimodal.imageAHashes(assets).toDF()
           .select(col("doc_id"), col("ahash"))
           .localCheckpoint(eager = false)

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Shared per-stage metrics collector for [[StageAudit]] and
+/** Per-stage metrics collector for [[graft.Bench]] and
   * [[StageGate]]. SparkListener events arrive asynchronously on the
   * listener bus (r17 ADVICE: a drain that races delivery can miss a
   * query's trailing stages and leak the previous query's late events

@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.ops.TextAnalysis
 
-/** CI gate form of [[StageAudit]] (r17 verdict item 4): the round's
+/** Runtime stage gate (r17 verdict item 4): the round's
   * two biggest performance findings — AQE's byte-based coalesce
   * folding a df²-expanding pair join into ONE task, and sub-splittable
   * single-file scans serializing CPU kernels — are RUNTIME pathologies
@@ -88,6 +89,30 @@ object StageGate {
       .groupBy().agg(sum("shared").as("total"))
   }
 
+  /** Run `body` under the bench-scale pair-join shape, then restore
+    * the session's confs. At deployment scale the pair sides are far
+    * above any broadcast threshold, so the pathology lives in a SHUFFLE
+    * join; at fixture scale AQE would broadcast the ~3 MB side and
+    * sidestep it, so auto-broadcast is off. The single-task fold itself
+    * depends on the exchange's COMPRESSED bytes vs AQE's min partition
+    * size (the fixture's ~3 MB exchange lands within jitter of the 1 MB
+    * default — 1 vs 3 post-coalesce partitions across runs), so the
+    * coalesce floor is pinned above the exchange size: exactly the
+    * original x103 manifestation, made deterministic. `--seed` and
+    * StageGateSpec both run under it.
+    */
+  def withSeedShape[A](spark: SparkSession)(body: => A): A = {
+    val keys = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "8m")
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** The N slowest declared queries per the last full bench artifact
     * (falls back to the known-heavy dedup/CC family when no artifact
     * exists on disk).
@@ -126,21 +151,10 @@ object StageGate {
     val threshold = 0.5
     try {
       if (rest.contains("--seed")) {
-        // the pathology lives in a SHUFFLE join (at deployment scale
-        // the pair sides are far above any broadcast threshold); at
-        // fixture scale AQE would broadcast the ~3 MB side and
-        // sidestep it, so the seed proof pins the shuffle shape. The
-        // single-task fold itself depends on the exchange's COMPRESSED
-        // bytes vs AQE's min partition size (the fixture's ~3 MB
-        // exchange lands within jitter of the 1 MB default — 1 vs 3
-        // post-coalesce partitions across runs), so the repro also
-        // pins the coalesce floor above the exchange size: exactly the
-        // original x103 manifestation, made deterministic
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-          "spark.sql.adaptive.coalescePartitions.minPartitionSize", "8m")
-        val vs = audit(spark, Seq("seeded_x103_shape"), threshold,
-          _ => seededRegression(spark, dir))
+        val vs = withSeedShape(spark) {
+          audit(spark, Seq("seeded_x103_shape"), threshold,
+            _ => seededRegression(spark, dir))
+        }
         vs.foreach(v => println(
           f"[gate] SEED stage=${v.stageId} tasks=1 cpu=${v.cpuSec}%.2f s"))
         if (vs.nonEmpty) {

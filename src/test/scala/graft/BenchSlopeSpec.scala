@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * tail) and nothing else — in particular NOT x110, whose
   * first-warm-run-high decaying shape (4.34 → 1.23 s) is residual
   * JIT, and NOT x5, whose big run was the already-discarded cold one.
+  * Also pins [[Bench.describe]], the failure line Bench and Verify
+  * record per failed query.
   */
 class BenchSlopeSpec extends AnyFunSuite {
 
@@ -47,5 +49,23 @@ class BenchSlopeSpec extends AnyFunSuite {
     assert(!Bench.slopeSuspicious(Vector(2.0, 1.0, 9.0)))
     // failed run sentinel (-1) must never flag
     assert(!Bench.slopeSuspicious(Vector(2.0, -1.0, 1.0, 1.0, 1.0, 9.0)))
+  }
+
+  test("describe names class, one-line message and the root's graft frame") {
+    val root = new IllegalArgumentException("bad\n  column")
+    root.setStackTrace(Array(
+      new StackTraceElement("org.apache.spark.Task", "run", "Task.scala", 9),
+      new StackTraceElement("graft.ops.Dedup$", "jaccard", "Dedup.scala", 42)))
+    val outer = new RuntimeException("job aborted", root)
+    outer.setStackTrace(Array(
+      new StackTraceElement("graft.Bench$", "run", "Bench.scala", 1)))
+    assert(Bench.describe(outer) == "java.lang.RuntimeException: job aborted" +
+      " @ graft.ops.Dedup$.jaccard(Dedup.scala:42)")
+    assert(Bench.describe(root) == "java.lang.IllegalArgumentException: " +
+      "bad column @ graft.ops.Dedup$.jaccard(Dedup.scala:42)")
+    val foreign = new IllegalStateException(null: String)
+    foreign.setStackTrace(Array.empty)
+    assert(Bench.describe(foreign) ==
+      "java.lang.IllegalStateException: null @ <no graft frame>")
   }
 }

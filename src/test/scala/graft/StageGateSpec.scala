@@ -46,40 +46,24 @@ class StageGateSpec extends SparkSpec {
 
   private val threshold = 0.3 // seconds of CPU; sf-scaled from the 0.5 s bench gate
 
-  // at bench scale the pair-join sides are far above the broadcast
-  // threshold, so the pathology lives in a SHUFFLE join; at spec scale
-  // AQE would broadcast the 16k-row side and sidestep it — disable
-  // auto-broadcast so the spec exercises the bench-scale join shape.
-  // The coalesce floor is pinned too (r18 verdict item 1): the seeded
-  // single-task fold depends on the exchange's COMPRESSED bytes vs
-  // AQE's min partition size, and this corpus's ~3 MB exchange lands
-  // within jitter of the 1 MB default (1 vs 3 post-coalesce partitions
-  // across runs — a coin-flip canary). The CLI `--seed` path pins the
-  // same floor (StageGate.scala `main`); without the pin here the
-  // red-direction proof was non-deterministic in CI.
-  private def benchScaleJoinShape[A](body: => A): A = {
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "8m")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
+  // both directions run under the bench-scale pair-join shape the CLI
+  // `--seed` proof uses (r18 verdict item 1: without its coalesce-floor
+  // pin the red-direction proof was non-deterministic in CI)
   test("gate goes RED on the seeded pre-r17 pair-join shape") {
-    val vs = benchScaleJoinShape(StageGate.audit(spark, Seq("seed"),
-      threshold, _ => StageGate.seededShape(corpus)))
+    val vs = StageGate.withSeedShape(spark) {
+      StageGate.audit(spark, Seq("seed"), threshold,
+        _ => StageGate.seededShape(corpus))
+    }
     assert(vs.nonEmpty,
       "seeded single-task expansion must trip the gate")
   }
 
   test("gate stays GREEN on shipped containmentTopHost (salt fallback)") {
-    val vs = benchScaleJoinShape(StageGate.audit(spark, Seq("shipped"),
-      threshold, _ => Dedup.containmentTopHost(corpus, "doc_id", "text",
-        "source", minContainment = 0.5)))
+    val vs = StageGate.withSeedShape(spark) {
+      StageGate.audit(spark, Seq("shipped"), threshold,
+        _ => Dedup.containmentTopHost(corpus, "doc_id", "text", "source",
+          minContainment = 0.5))
+    }
     assert(vs.isEmpty, s"violations: $vs")
   }
 }
