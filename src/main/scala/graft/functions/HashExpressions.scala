@@ -564,10 +564,4 @@ object HashFunctions {
     ColumnBridge.column(
       MinHashAgg(ColumnBridge.expression(tokens), numHashes)
         .toAggregateExpression())
-  /** Aggregating SimHash: one 64-bit signature per group, equal to
-    * `simhash64` over the concatenation of the group's token arrays.
-    */
-  def simhashAgg(tokens: Column): Column =
-    ColumnBridge.column(
-      SimHashAgg(ColumnBridge.expression(tokens)).toAggregateExpression())
 }

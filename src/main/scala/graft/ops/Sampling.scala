@@ -551,7 +551,7 @@ object Sampling {
 
   /** Scores documents against a frozen [[DsirModel]] as ONE stateless
     * per-row projection — no joins, no shuffles, no state — so it runs
-    * unchanged on a STREAM ([[graft.streaming.DocStreams.dsirScores]])
+    * unchanged on a STREAM (StreamingSpec streams this op itself)
     * and composes in front of any gate. The ratio table rides inside
     * the native [[graft.functions.DsirKernel]] codegen expression (the
     * MaxPlanCentroids bounded-literal pattern) which fingerprints every

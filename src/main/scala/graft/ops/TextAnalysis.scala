@@ -1475,9 +1475,10 @@ object TextAnalysis {
     * 6 dp and the per-doc mean routes through DECIMAL(18,6) — the
     * full x73 determinism contract, so the oracle matches bit-wise.
     *
-    * Shares [[lmQuality]]'s one-checkpoint-per-session release slot
-    * (same documented contract: a returned frame is valid until the
-    * same session's next lm call).
+    * Shares [[lmQuality]]'s per-session LRU of [[LmSlotCapacity]]
+    * persisted frames (same documented contract: a returned frame is
+    * valid for the life of the session; eviction only unpersists, so
+    * an evicted frame recomputes from lineage).
     *
     * Scale: the bigram-type model builds in one map-side-combinable
     * aggregate off one checkpointed compute; `cu`/`np`/`bt` are
@@ -2635,8 +2636,8 @@ object TextAnalysis {
 
   /** Scores documents against a frozen [[LangTrigramModel]] as ONE
     * stateless per-row projection — no joins, no shuffles, no state —
-    * so it runs unchanged on a STREAM
-    * ([[graft.streaming.DocStreams.langIdScores]]). The L×dim table
+    * so it runs unchanged on a STREAM (StreamingSpec streams this op
+    * itself). The L×dim table
     * rides inside the native [[graft.functions.LangIdKernel]] codegen
     * expression; every language is scored in the same single text scan
     * and the arg-max (ties → lexicographically smallest language) is

@@ -5044,7 +5044,7 @@ object ExtensionCatalog {
     // paper's joint objective). Pure stateless per-row projection —
     // zero shuffle (plan-gated), all integer/md5/substr primitives, so
     // the driver hash-checks the exact training bytes a rewriter would
-    // materialize. Streaming twin: DocStreams.fimTransform.
+    // materialize. It runs on a streaming frame as is (StreamingSpec).
     QueryDef("x125_fim_transform",
       (s, dir) => ordered(graft.ops.DataPipeline.fimTransform(
         t(s, dir, "documents").filter(col("text").isNotNull),

@@ -2,12 +2,13 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DoubleType
 
 import graft.ops.Dedup
+import graft.ops.TextAnalysis.{Kn3Model, LmModel}
 
 /** Candidate near-duplicate pair emitted by the online detector. */
 case class CandidatePair(a_id: Long, b_id: Long)
@@ -85,6 +86,14 @@ case class IngestPair(new_id: Long, seen_id: Long, jaccard: Double)
   * Emitted pairs are LSH *candidates* (min-id first); verification —
   * exact Jaccard via a re-join with token sets — composes downstream,
   * batch or stream-static, exactly as in the batch x12 path.
+  *
+  * Stateless batch ops need no twin here: DSIR scoring, language ID,
+  * the Gopher and blocklist gates, the domain gate and the FIM rewrite
+  * are per-row projections that run on a streaming frame verbatim
+  * (StreamingSpec streams the batch ops themselves). The projection
+  * twins below ([[piiScrubbed]], [[bpeTokenCounts]], [[mainContent]],
+  * [[canonicalUrls]]) exist because they turn kernel column functions
+  * and struct fields into named output columns.
   */
 object DocStreams {
 
@@ -97,10 +106,10 @@ object DocStreams {
     * verdict's idle-key finding for the DOCUMENT side the way
     * `EventStreams.boundedStateDoc` closed the event side): no keyed
     * state in this object runs `NoTimeout` over an unbounded key
-    * population. Documents carry no event-time column, so each twin
-    * synthesizes one — `_ats = current_timestamp()` (the micro-batch
-    * timestamp: per-batch-constant, retry-deterministic) under a
-    * 0-delay watermark ([[arrivalStamped]]) — and runs
+    * population. Documents carry no event-time column, so
+    * [[arrivalTtl]] synthesizes one — `_ats = current_timestamp()`
+    * (the micro-batch timestamp: per-batch-constant,
+    * retry-deterministic) under a 0-delay watermark — and runs
     * `GroupStateTimeout.EventTimeTimeout` against it: every state
     * access re-arms an `idleTtlMs` timer off the batch's arrival
     * time, and a key idle past it is REMOVED outright (state is
@@ -118,10 +127,11 @@ object DocStreams {
     *  - dedup-memory keys (LSH buckets, chunk hashes) restart empty —
     *    a re-arrival can re-pair/re-flag against post-expiry content
     *    only (pure recall cost against expired content);
-    *  - per-document re-delivery guards (the one-Boolean keys) lapse —
-    *    a document re-delivered LATER than the retention window
-    *    re-emits its row, the standard at-least-once tail every
-    *    TTL'd dedup guard has (downstream consumers key on doc_id).
+    *  - per-document re-delivery guards (the one-Boolean keys of
+    *    [[emitOnce]]) lapse — a document re-delivered LATER than the
+    *    retention window re-emits its row, the standard at-least-once
+    *    tail every TTL'd dedup guard has (downstream consumers key on
+    *    doc_id).
     * Batch execution is untouched: the watermark node is eliminated
     * and timers never fire (`setTimeoutTimestamp` records, nothing
     * expires), so batch ≡ stream equivalence holds verbatim. The ONE deliberate
@@ -131,28 +141,106 @@ object DocStreams {
     */
   private[streaming] def boundedDocState(): Unit = ()
 
-  /** Stamps the synthetic arrival-time column the TTL machinery keys
-    * on ([[boundedDocState]]): `_ats` is the micro-batch timestamp
-    * under a 0-delay watermark, so the watermark tracks the latest
-    * batch's arrival instant (arrival time never regresses, and
-    * stateful operators do not late-filter rows, so a 0 delay is
-    * safe). In batch execution the watermark node is eliminated by
-    * the analyzer and the column is a query constant — inert.
+  /** The one keyed-state skeleton of this object ([[boundedDocState]]):
+    * stamps `rows` with the arrival time `_ats` under a 0-delay
+    * watermark (arrival time never regresses, and stateful operators
+    * do not late-filter rows, so a 0 delay is safe; in batch execution
+    * the watermark node is eliminated and the column is a query
+    * constant), groups by `key`, and per key either REMOVES the state
+    * on an idle timeout or runs `fold(key, this batch's rows, state)`,
+    * stores the state it returns and re-arms the idle timer at (this
+    * batch's arrival time + TTL). The arrival timestamp rides next to
+    * each row unprojected: the analyzer's event-time-timeout check
+    * requires the watermark-tagged column in the stateful operator's
+    * child output.
     */
-  private def arrivalStamped(df: DataFrame): DataFrame =
-    df.withColumn("_ats", current_timestamp())
+  private def arrivalTtl[V, K: Encoder, S: Encoder, U: Encoder](
+      rows: Dataset[V], idleTtlMs: Long)(key: V => K)(
+      fold: (K, Seq[V], Option[S]) => (S, Iterator[U])): Dataset[U] =
+    rows.select(struct(col("*")).as("v"))
+      .withColumn("_ats", current_timestamp())
       .withWatermark("_ats", "0 seconds")
+      .as(Encoders.tuple(rows.encoder, Encoders.TIMESTAMP))
+      .groupByKey(r => key(r._1))
+      .flatMapGroupsWithState(
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (k: K, it: Iterator[(V, java.sql.Timestamp)], state: GroupState[S]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val batch = it.toSeq
+            val (next, out) = fold(k, batch.map(_._1), state.getOption)
+            state.update(next)
+            state.setTimeoutTimestamp(
+              batch.iterator.map(_._2.getTime).max + idleTtlMs)
+            out
+          }
+      }
 
-  /** Re-arms a key's idle timer at (this batch's arrival time + TTL).
-    * The arrival timestamp rides the grouped tuples UNPROJECTED (the
-    * analyzer's event-time-timeout check requires the watermark-tagged
-    * column in the stateful operator's child output — the
-    * EventStreams `ts`-rides-along convention). No-op in batch
-    * execution (timers never fire there).
+  /** [[arrivalTtl]] with a one-Boolean re-delivery guard: the first
+    * batch that carries a key emits `emit(key, rows)`, later batches
+    * within the retention window emit nothing. A document's rows all
+    * arrive in its own micro-batch (whole documents enter the stream
+    * atomically), so the first invocation sees the key's complete
+    * input.
     */
-  private def armIdle(state: GroupState[_], atsMs: Long,
-      idleTtlMs: Long): Unit =
-    state.setTimeoutTimestamp(atsMs + idleTtlMs)
+  private def emitOnce[V, K: Encoder, U: Encoder](rows: Dataset[V],
+      idleTtlMs: Long)(key: V => K)(emit: (K, Seq[V]) => U): Dataset[U] = {
+    implicit val guardEnc: Encoder[Boolean] = Encoders.scalaBoolean
+    arrivalTtl(rows, idleTtlMs)(key) {
+      (k: K, batch: Seq[V], seen: Option[Boolean]) =>
+        (true,
+          if (seen.isDefined) Iterator.empty
+          else Iterator.single(emit(k, batch)))
+    }
+  }
+
+  /** The bucket-pairing fold shared by [[nearDupCandidates]] and
+    * [[VecStreams.semanticDedupCandidates]]: each new id pairs with
+    * every retained bucket-mate (min id first) and joins the bucket
+    * while it holds fewer than `maxBucket` members; re-deliveries and
+    * same-batch duplicates of an id emit nothing new (the bucket
+    * already reported its pairs).
+    */
+  private[streaming] def pairInBucket(retained: Seq[Long],
+      ids: Iterator[Long], maxBucket: Int)
+      : (Seq[Long], Iterator[CandidatePair]) = {
+    val seen = retained.toBuffer
+    val out = mutable.ArrayBuffer.empty[CandidatePair]
+    ids.foreach { id =>
+      if (!seen.contains(id)) {
+        seen.foreach { s =>
+          out += CandidatePair(math.min(s, id), math.max(s, id))
+        }
+        if (seen.length < maxBucket) seen += id
+      }
+    }
+    (seen.toSeq, out.iterator)
+  }
+
+  /** The per-document mean of the LM twins: accumulates the
+    * 6-dp-rounded nll values re-quantized at scale 6 (what Spark's
+    * double→DECIMAL(18,6) cast does) in exact BigDecimal, then ONE
+    * double division like the batch plan — bit-identical to the batch
+    * DECIMAL(18,6) route on shared n-grams.
+    */
+  private def exactMean6(nlps: Seq[Double]): Double =
+    nlps.map(d => BigDecimal(d)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble /
+      nlps.size
+
+  /** Head/middle/tail against frozen per-language cutoffs, shared by
+    * [[ccnetGate]] and [[kn3Gate]]: a doc exactly on a cutoff goes to
+    * the lower bucket (batch ntile splits such ties by doc_id), and
+    * unknown or null languages go to `tail` — an ungated language
+    * shouldn't sneak into head.
+    */
+  private def cutoffBucket(cutoffs: Map[String, (Double, Double)],
+      lang: String, avg: Double): String =
+    cutoffs.get(lang) match {
+      case Some((c1, _)) if avg <= c1 => "head"
+      case Some((_, c2)) if avg <= c2 => "middle"
+      case _ => "tail"
+    }
 
   /** Online LSH candidate pairs over a document stream. Also runs on a
     * batch DataFrame (state starts empty, one "micro-batch") — the
@@ -164,59 +252,18 @@ object DocStreams {
       maxBucket: Int = 64,
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    arrivalStamped(
-        Dedup.bandedSignatures(docs, idCol, tokenSetCol, numHashes, bands))
-      .select(col("id"), col("band_id"), col("band_hash"),
-        col("_ats"))
-      .as[(Long, Int, Long, java.sql.Timestamp)]
-      .groupByKey { case (_, band, hash, _) => (band, hash) }
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, Long), rows: Iterator[(Long, Int, Long, java.sql.Timestamp)],
-            state: GroupState[Seq[Long]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val seen = state.getOption.getOrElse(Seq.empty[Long]).toBuffer
-            val out = mutable.ArrayBuffer.empty[CandidatePair]
-            var maxAts = Long.MinValue
-            rows.foreach { case (id, _, _, ats) =>
-              maxAts = math.max(maxAts, ats.getTime)
-              // re-deliveries and same-batch duplicates of an id emit
-              // nothing new: the bucket already reported its pairs
-              if (!seen.contains(id)) {
-                seen.foreach { s =>
-                  out += CandidatePair(math.min(s, id), math.max(s, id))
-                }
-                if (seen.length < maxBucket) seen += id
-              }
-            }
-            state.update(seen.toSeq)
-            armIdle(state, maxAts, idleTtlMs)
-            out.iterator
-          }
-      }
+    val banded =
+      Dedup.bandedSignatures(docs, idCol, tokenSetCol, numHashes, bands)
+        .select(col("id"), col("band_id"), col("band_hash"))
+        .as[(Long, Int, Long)]
+    arrivalTtl(banded, idleTtlMs)(r => (r._2, r._3)) {
+      (_: (Int, Long), batch: Seq[(Long, Int, Long)],
+          retained: Option[Seq[Long]]) =>
+        pairInBucket(retained.getOrElse(Seq.empty), batch.iterator.map(_._1),
+          maxBucket)
+    }
   }
 
-  /** Online repeated-chunk (boilerplate) detection — the streaming twin
-    * of [[graft.ops.Dedup.dropRepeatedChunks]]: each arriving document
-    * splits into non-overlapping `chunkSize`-token chunks (the same
-    * stateless [[graft.ops.TextAnalysis.tokenChunks]] projection), and
-    * per-chunk-key state holds ONE long — the smallest document id seen
-    * carrying that chunk. An arrival whose chunk was already seen in an
-    * earlier (smaller-id) document emits a [[ChunkRepeat]] flag;
-    * downstream drops the flagged chunk instances and reassembles, or
-    * routes flagged docs to quarantine.
-    *
-    * State is strictly bounded: 8 bytes per DISTINCT chunk ever seen,
-    * regardless of how often boilerplate repeats — the first-seen id is
-    * the entire state (vs the batch operator's one-row-per-hot-key freq
-    * side). Same-document repetition is never flagged (matching the
-    * batch operator's min(doc)<max(doc) contract). Within a micro-batch
-    * the group is processed in (doc_id, chunk_id) order, so emissions
-    * are deterministic under any batching of an id-ordered feed; an
-    * out-of-order smaller id simply becomes the new first and is itself
-    * never flagged — the inherent online-vs-batch attribution gap.
-    */
   /** ONLINE train/eval contamination guard — the streaming twin of
     * [[graft.ops.Contamination.report]], in the production direction:
     * the eval/benchmark set is FIXED and bounded, the training corpus
@@ -229,9 +276,10 @@ object DocStreams {
     * `broadcast` so the stream-static join is stateless and map-side;
     * arriving documents explode to their distinct shingle hashes,
     * join, and aggregate per (train, eval) pair via one-boolean keyed
-    * state that also makes re-delivered documents emit nothing new.
-    * State is one boolean per CONTAMINATED pair — proportional to the
-    * contamination found (rare by construction), never to the corpus.
+    * state ([[emitOnce]]) that also makes re-delivered documents emit
+    * nothing new. State is one boolean per CONTAMINATED pair —
+    * proportional to the contamination found (rare by construction),
+    * never to the corpus.
     *
     * Emits each hit exactly once, in the arrival micro-batch, with the
     * exact distinct-shingle overlap count — same numbers the batch
@@ -249,34 +297,28 @@ object DocStreams {
           split(col(text), " ", -1), k, keepPartial = true))).as("sk"))
     val ev = broadcast(shingleRows(evalDocs, evalIdCol, evalTextCol,
       "eval_id"))
-    arrivalStamped(shingleRows(docs, idCol, textCol, "train_id")
-        .join(ev, "sk"))
-      .select(col("train_id"), col("eval_id"),
-        col("_ats"))
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (pair: (Long, Long), rows: Iterator[(Long, Long, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          // a document's shingle rows all arrive in its own micro-batch
-          // (whole documents enter the stream atomically), so the first
-          // group invocation sees the pair's complete overlap; the
-          // boolean guards against re-delivered documents within the
-          // retention window (boundedDocState)
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._3.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._3.getTime).max, idleTtlMs)
-            Iterator.single(
-              ContaminationHit(pair._1, pair._2, batch.size.toLong))
-          }
-      }
+    val hits = shingleRows(docs, idCol, textCol, "train_id").join(ev, "sk")
+      .select(col("train_id"), col("eval_id")).as[(Long, Long)]
+    emitOnce(hits, idleTtlMs)(identity) {
+      (pair: (Long, Long), batch: Seq[(Long, Long)]) =>
+        ContaminationHit(pair._1, pair._2, batch.size.toLong)
+    }
   }
+
+  /** Per-bigram add-one nll under a frozen [[LmModel]], joined onto
+    * `pr`'s bigram rows as `nlp`: bigrams the model has never seen
+    * score with the smoothing the batch model gives count-0 events —
+    * `-ln(1 / (cu + V))` under a known prefix, `-ln(1 / V)` under an
+    * unknown one. The model tables are vocabulary-bounded right sides,
+    * all broadcast.
+    */
+  private def lmNlp(pr: DataFrame, model: LmModel): DataFrame =
+    pr.join(broadcast(model.bigrams), Seq("w1", "w2"), "left")
+      .join(broadcast(model.prefixes), Seq("w1"), "left")
+      .withColumn("nlp", round(-log(
+        (coalesce(col("cb"), lit(0L)) + 1).cast("double") /
+          (coalesce(col("cu"), lit(0L)).cast("double") +
+            lit(model.vocabSize))), 6))
 
   /** ONLINE LM quality scoring: every arriving document scored against
     * a FROZEN corpus model ([[graft.ops.TextAnalysis.lmModel]]) — the
@@ -285,20 +327,14 @@ object DocStreams {
     * the existing corpus; each crawl drop scored as it lands, atypical
     * documents flagged before they enter the training set).
     *
-    * The model tables join stream-static (vocabulary-bounded right
-    * sides — broadcast), so scoring is stateless per bigram row; the
-    * per-document mean uses one keyed-state pass with a boolean guard
-    * (documents arrive atomically in their micro-batch, the standing
-    * [[contaminationHits]] argument; re-delivery emits nothing).
-    * Bigrams the model has never seen score with the same add-one
-    * smoothing the batch model gives count-0 events:
-    * `-ln(1 / (cu + V))` under a known prefix, `-ln(1 / V)` under an
-    * unknown one. The mean accumulates the 6-dp-rounded nll values in
-    * exact BigDecimal — bit-identical to the batch DECIMAL(18,6) route
-    * on shared bigrams.
+    * The model tables join stream-static ([[lmNlp]]), so scoring is
+    * stateless per bigram row; the per-document mean ([[exactMean6]])
+    * uses one keyed-state pass with a boolean guard ([[emitOnce]]:
+    * documents arrive atomically in their micro-batch; re-delivery
+    * emits nothing).
     */
   def lmScores(docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.TextAnalysis.LmModel,
+      model: LmModel,
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[DocLmScore] = {
     import docs.sparkSession.implicits._
     // the model carries its tokenizer (LmModel.tokenize): a probe
@@ -306,39 +342,43 @@ object DocStreams {
     // silently score every bigram as unseen
     val pr = graft.ops.TextAnalysis.bigramRows(docs, idCol, textCol,
       model.tokenize)
-    val nlp = round(-log(
-      (coalesce(col("cb"), lit(0L)) + 1).cast("double") /
-        (coalesce(col("cu"), lit(0L)).cast("double") +
-          lit(model.vocabSize))), 6)
-    arrivalStamped(pr.join(broadcast(model.bigrams), Seq("w1", "w2"), "left")
-        .join(broadcast(model.prefixes), Seq("w1"), "left"))
-      .select(col("doc_id"), nlp.as("nlp"),
-        col("_ats"))
-      .as[(Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (doc: Long, rows: Iterator[(Long, Double, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._3.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._3.getTime).max, idleTtlMs)
-            val nlps = batch.map(_._2)
-            // mirror the batch DECIMAL(18,6) route exactly: each double
-            // is the 6-dp-rounded nll, re-quantized at scale 6 (what
-            // Spark's double→DECIMAL(18,6) cast does), summed exactly,
-            // then ONE double division like the batch plan
-            val sum = nlps.map(d => BigDecimal(d)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum
-            Iterator.single(DocLmScore(doc, nlps.size.toLong,
-              sum.toDouble / nlps.size))
-          }
-      }
+    val scored = lmNlp(pr, model).select(col("doc_id"), col("nlp"))
+      .as[(Long, Double)]
+    emitOnce(scored, idleTtlMs)(_._1) {
+      (doc: Long, batch: Seq[(Long, Double)]) =>
+        val nlps = batch.map(_._2)
+        DocLmScore(doc, nlps.size.toLong, exactMean6(nlps))
+    }
+  }
+
+  /** The per-trigram back-off nll of [[kn3Scores]]/[[kn3Gate]], joined
+    * onto `pr`'s trigram rows as `nlp` (model tables
+    * vocabulary-bounded, all broadcast) — spelled to be BIT-EQUAL to
+    * the batch x111 expression wherever every lookup hits:
+    * greatest(x−d, 0) = x−d exactly for counts ≥ 1, and each when()
+    * branch reproduces the batch arithmetic order.
+    */
+  private def kn3Nlp(pr: DataFrame, model: Kn3Model): DataFrame = {
+    val bt = lit(model.btCount)
+    val pc1 = when(col("pred").isNotNull,
+        col("pred").cast(DoubleType) / bt)
+      .otherwise(lit(0.75) / bt.cast(DoubleType))
+    val pc2 = when(col("mid").isNotNull,
+        (greatest(coalesce(col("cont"), lit(0L)) - 0.75, lit(0.0)) /
+          col("mid")) +
+        (((lit(0.75) * col("n2f")) / col("mid")) * pc1))
+      .otherwise(pc1)
+    val p = when(col("ctx").isNotNull,
+        (greatest(coalesce(col("c3"), lit(0L)) - 0.75, lit(0.0)) /
+          col("ctx")) +
+        (((lit(0.75) * col("n3f")) / col("ctx")) * pc2))
+      .otherwise(pc2)
+    pr.join(broadcast(model.tri), Seq("w1", "w2", "w3"), "left")
+      .join(broadcast(model.ctx), Seq("w1", "w2"), "left")
+      .join(broadcast(model.cont), Seq("w2", "w3"), "left")
+      .join(broadcast(model.mid), Seq("w2"), "left")
+      .join(broadcast(model.pred), Seq("w3"), "left")
+      .withColumn("nlp", round(-log(p), 6))
   }
 
   /** ONLINE trigram-KN quality scoring against a FROZEN model
@@ -362,71 +402,19 @@ object DocStreams {
     * and every branch follows the observed path — bit-identical to
     * batch x111 (StreamingSpec pins it).
     */
-  /** The per-trigram back-off nll of [[kn3Scores]]/[[kn3Gate]] —
-    * spelled to be BIT-EQUAL to the batch x111 expression wherever
-    * every lookup hits: greatest(x−d, 0) = x−d exactly for counts
-    * ≥ 1, and each when() branch reproduces the batch arithmetic
-    * order.
-    */
-  private def kn3Nlp(model: graft.ops.TextAnalysis.Kn3Model)
-      : org.apache.spark.sql.Column = {
-    val bt = lit(model.btCount)
-    val pc1 = when(col("pred").isNotNull,
-        col("pred").cast(DoubleType) / bt)
-      .otherwise(lit(0.75) / bt.cast(DoubleType))
-    val pc2 = when(col("mid").isNotNull,
-        (greatest(coalesce(col("cont"), lit(0L)) - 0.75, lit(0.0)) /
-          col("mid")) +
-        (((lit(0.75) * col("n2f")) / col("mid")) * pc1))
-      .otherwise(pc1)
-    val p = when(col("ctx").isNotNull,
-        (greatest(coalesce(col("c3"), lit(0L)) - 0.75, lit(0.0)) /
-          col("ctx")) +
-        (((lit(0.75) * col("n3f")) / col("ctx")) * pc2))
-      .otherwise(pc2)
-    round(-log(p), 6)
-  }
-
-  /** The model-table join chain shared by [[kn3Scores]]/[[kn3Gate]] —
-    * vocabulary-bounded right sides, all broadcast. */
-  private def joinKn3(pr: DataFrame,
-      model: graft.ops.TextAnalysis.Kn3Model): DataFrame =
-    pr.join(broadcast(model.tri), Seq("w1", "w2", "w3"), "left")
-      .join(broadcast(model.ctx), Seq("w1", "w2"), "left")
-      .join(broadcast(model.cont), Seq("w2", "w3"), "left")
-      .join(broadcast(model.mid), Seq("w2"), "left")
-      .join(broadcast(model.pred), Seq("w3"), "left")
-
   def kn3Scores(docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.TextAnalysis.Kn3Model,
+      model: Kn3Model,
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[DocKn3Score] = {
     import docs.sparkSession.implicits._
     val pr = graft.ops.TextAnalysis.trigramRows(docs, idCol, textCol,
       model.tokenize)
-    arrivalStamped(joinKn3(pr, model))
-      .select(col("doc_id"), kn3Nlp(model).as("nlp"),
-        col("_ats"))
-      .as[(Long, Double, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (doc: Long, rows: Iterator[(Long, Double, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._3.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._3.getTime).max, idleTtlMs)
-            val nlps = batch.map(_._2)
-            val sum = nlps.map(d => BigDecimal(d)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum
-            Iterator.single(DocKn3Score(doc, nlps.size.toLong,
-              sum.toDouble / nlps.size))
-          }
-      }
+    val scored = kn3Nlp(pr, model).select(col("doc_id"), col("nlp"))
+      .as[(Long, Double)]
+    emitOnce(scored, idleTtlMs)(_._1) {
+      (doc: Long, batch: Seq[(Long, Double)]) =>
+        val nlps = batch.map(_._2)
+        DocKn3Score(doc, nlps.size.toLong, exactMean6(nlps))
+    }
   }
 
   /** Online trigram-KN CCNet gate — the ingest-time twin of batch
@@ -434,50 +422,26 @@ object DocStreams {
     * model instead of the add-one bigram LM): each arriving document
     * is scored and bucketed head/middle/tail against FROZEN
     * per-language cutoffs
-    * ([[graft.ops.TextAnalysis.ccnetCutoffsKn3]], computed offline).
-    * The same tie/unknown-language semantics as [[ccnetGate]]: a doc
-    * exactly on a cutoff goes to the lower bucket (batch ntile splits
-    * ties by doc_id); unknown/null languages gate to "tail".
+    * ([[graft.ops.TextAnalysis.ccnetCutoffsKn3]], computed offline)
+    * with [[ccnetGate]]'s tie/unknown-language rule ([[cutoffBucket]]).
     */
   def kn3Gate(docs: DataFrame, idCol: String, textCol: String,
-      langCol: String, model: graft.ops.TextAnalysis.Kn3Model,
+      langCol: String, model: Kn3Model,
       cutoffs: Map[String, (Double, Double)],
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[DocKn3Bucket] = {
     import docs.sparkSession.implicits._
     val pr = graft.ops.TextAnalysis.trigramRowsWith(docs, idCol,
       textCol, langCol, model.tokenize)
-    arrivalStamped(joinKn3(pr, model))
-      .select(col("doc_id"), col("carry"), kn3Nlp(model).as("nlp"),
-        col("_ats"))
-      .as[(Long, String, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Long, String), rows: Iterator[(Long, String, Double, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._4.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._4.getTime).max, idleTtlMs)
-            val nlps = batch.map(_._3)
-            val sum = nlps.map(d => BigDecimal(d)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum
-            val avg = sum.toDouble / nlps.size
-            val bucket = cutoffs.get(key._2) match {
-              case Some((c1, c2)) =>
-                if (avg <= c1) "head"
-                else if (avg <= c2) "middle"
-                else "tail"
-              case None => "tail"
-            }
-            Iterator.single(DocKn3Bucket(key._1, key._2,
-              nlps.size.toLong, avg, bucket))
-          }
-      }
+    val scored = kn3Nlp(pr, model)
+      .select(col("doc_id"), col("carry"), col("nlp"))
+      .as[(Long, String, Double)]
+    emitOnce(scored, idleTtlMs)(r => (r._1, r._2)) {
+      (key: (Long, String), batch: Seq[(Long, String, Double)]) =>
+        val nlps = batch.map(_._3)
+        val avg = exactMean6(nlps)
+        DocKn3Bucket(key._1, key._2, nlps.size.toLong, avg,
+          cutoffBucket(cutoffs, key._2, avg))
+    }
   }
 
   /** Online CCNet gate — the ingest-time twin of batch x92: each
@@ -487,87 +451,65 @@ object DocStreams {
     * per-language tercile cutoffs
     * ([[graft.ops.TextAnalysis.ccnetCutoffs]], computed offline).
     * Bucket assignment matches batch exactly when no two documents
-    * tie on a cutoff score (batch ntile splits such ties by doc_id;
-    * the gate sends both to the lower bucket). Unknown or null
-    * languages bucket `tail` — conservative: an ungated language
-    * shouldn't sneak into head.
+    * tie on a cutoff score ([[cutoffBucket]]).
     */
   def ccnetGate(docs: DataFrame, idCol: String, textCol: String,
-      langCol: String, model: graft.ops.TextAnalysis.LmModel,
+      langCol: String, model: LmModel,
       cutoffs: Map[String, (Double, Double)],
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[DocCcnetBucket] = {
     import docs.sparkSession.implicits._
     val pr = graft.ops.TextAnalysis.bigramRowsWith(docs, idCol, textCol,
       langCol, model.tokenize)
-    val nlp = round(-log(
-      (coalesce(col("cb"), lit(0L)) + 1).cast("double") /
-        (coalesce(col("cu"), lit(0L)).cast("double") +
-          lit(model.vocabSize))), 6)
-    arrivalStamped(
-        pr.join(broadcast(model.bigrams), Seq("w1", "w2"), "left")
-          .join(broadcast(model.prefixes), Seq("w1"), "left"))
-      .select(col("doc_id"), col("carry"), nlp.as("nlp"),
-        col("_ats"))
-      .as[(Long, String, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Long, String), rows: Iterator[(Long, String, Double, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._4.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._4.getTime).max, idleTtlMs)
-            val nlps = batch.map(_._3)
-            val sum = nlps.map(d => BigDecimal(d)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP)).sum
-            val avg = sum.toDouble / nlps.size
-            val bucket = cutoffs.get(key._2) match {
-              case Some((c1, c2)) =>
-                if (avg <= c1) "head"
-                else if (avg <= c2) "middle"
-                else "tail"
-              case None => "tail"
-            }
-            Iterator.single(DocCcnetBucket(key._1, key._2,
-              nlps.size.toLong, avg, bucket))
-          }
-      }
+    val scored = lmNlp(pr, model)
+      .select(col("doc_id"), col("carry"), col("nlp"))
+      .as[(Long, String, Double)]
+    emitOnce(scored, idleTtlMs)(r => (r._1, r._2)) {
+      (key: (Long, String), batch: Seq[(Long, String, Double)]) =>
+        val nlps = batch.map(_._3)
+        val avg = exactMean6(nlps)
+        DocCcnetBucket(key._1, key._2, nlps.size.toLong, avg,
+          cutoffBucket(cutoffs, key._2, avg))
+    }
   }
 
+  /** Online repeated-chunk (boilerplate) detection — the streaming twin
+    * of [[graft.ops.Dedup.dropRepeatedChunks]]: each arriving document
+    * splits into non-overlapping `chunkSize`-token chunks (the same
+    * stateless [[graft.ops.TextAnalysis.tokenChunks]] projection), and
+    * per-chunk-key state holds ONE long — the smallest document id seen
+    * carrying that chunk. An arrival whose chunk was already seen in an
+    * earlier (smaller-id) document emits a [[ChunkRepeat]] flag;
+    * downstream drops the flagged chunk instances and reassembles, or
+    * routes flagged docs to quarantine.
+    *
+    * State is strictly bounded: 8 bytes per DISTINCT chunk ever seen,
+    * regardless of how often boilerplate repeats — the first-seen id is
+    * the entire state (vs the batch operator's one-row-per-hot-key freq
+    * side). Same-document repetition is never flagged (matching the
+    * batch operator's min(doc)<max(doc) contract). Within a micro-batch
+    * the group is processed in (doc_id, chunk_id) order, so emissions
+    * are deterministic under any batching of an id-ordered feed; an
+    * out-of-order smaller id simply becomes the new first and is itself
+    * never flagged — the inherent online-vs-batch attribution gap.
+    */
   def repeatedChunkFlags(docs: DataFrame, idCol: String, textCol: String,
       chunkSize: Int,
       idleTtlMs: Long = DefaultIdleTtlMs): Dataset[ChunkRepeat] = {
     import docs.sparkSession.implicits._
-    arrivalStamped(graft.ops.TextAnalysis.tokenChunks(docs, idCol,
-        textCol, chunkSize = chunkSize, stride = chunkSize))
-      .select(col("doc_id"), col("chunk_id"),
-        xxhash64(col("chunk")).as("k"),
-        col("_ats"))
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-            state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r => (r._1, r._2))
-            val out = mutable.ArrayBuffer.empty[ChunkRepeat]
-            var first = state.getOption.getOrElse(Long.MaxValue)
-            sorted.foreach { case (doc, cid, _, _) =>
-              if (first < doc) out += ChunkRepeat(doc, cid, first)
-              else if (doc < first) first = doc
-            }
-            state.update(first)
-            armIdle(state, sorted.iterator.map(_._4.getTime).max, idleTtlMs)
-            out.iterator
-          }
-      }
+    val chunks = graft.ops.TextAnalysis.tokenChunks(docs, idCol, textCol,
+        chunkSize = chunkSize, stride = chunkSize)
+      .select(col("doc_id"), col("chunk_id"), xxhash64(col("chunk")))
+      .as[(Long, Long, Long)]
+    arrivalTtl(chunks, idleTtlMs)(_._3) {
+      (_: Long, batch: Seq[(Long, Long, Long)], first0: Option[Long]) =>
+        val out = mutable.ArrayBuffer.empty[ChunkRepeat]
+        var first = first0.getOrElse(Long.MaxValue)
+        batch.sortBy(r => (r._1, r._2)).foreach { case (doc, cid, _) =>
+          if (first < doc) out += ChunkRepeat(doc, cid, first)
+          else if (doc < first) first = doc
+        }
+        (first, out.iterator)
+    }
   }
 
   /** Online PII scrub — the ingest-time twin of the batch x46 pass:
@@ -587,33 +529,6 @@ object DocStreams {
       scan.getField("n_ips").as("n_ips"),
       scan.getField("redacted").as("redacted"))
   }
-
-  /** Online DSIR scoring against a frozen target/source contrast — the
-    * streaming twin of batch x84 in the production direction (model
-    * built offline via [[graft.ops.Sampling.dsirModel]], each crawl
-    * drop scored as it lands, e.g. to gate on "looks like the target
-    * domain"). [[graft.ops.Sampling.dsirScore]] is already ONE
-    * stateless per-row projection with the ratio table as a plan
-    * literal, so it applies to a streaming frame verbatim: no state,
-    * no watermark, any trigger.
-    */
-  def dsirScores(docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.Sampling.DsirModel): DataFrame =
-    graft.ops.Sampling.dsirScore(docs, idCol, textCol, model)
-
-  /** Online language ID against a frozen trained trigram model — the
-    * streaming twin of batch x87 (model fit offline on labeled seed
-    * data via [[graft.ops.TextAnalysis.langTrigramModel]], each
-    * arriving document tagged at feed rate, e.g. to route or gate by
-    * language before the per-language pipelines).
-    * [[graft.ops.TextAnalysis.langIdScore]] is already ONE stateless
-    * per-row kernel projection with the L×dim table as a plan literal,
-    * so it applies to a streaming frame verbatim: no state, no
-    * watermark, any trigger.
-    */
-  def langIdScores(docs: DataFrame, idCol: String, textCol: String,
-      model: graft.ops.TextAnalysis.LangTrigramModel): DataFrame =
-    graft.ops.TextAnalysis.langIdScore(docs, idCol, textCol, model)
 
   /** Online BPE token counting under a FROZEN learned merge list — the
     * streaming twin of batch x88's encode side (merges trained offline
@@ -647,17 +562,6 @@ object DocStreams {
       ex.getField("main_text").as("main_text"))
   }
 
-  /** Online Gopher quality gate — the ingest-time twin of batch x91
-    * (stamp the rule-suite verdict the moment a document arrives, e.g.
-    * to drop obvious junk before it costs downstream compute).
-    * [[graft.ops.TextAnalysis.gopherRules]] is one stateless kernel
-    * scan + threshold projection, so it applies to a streaming frame
-    * verbatim: no state, no watermark, any trigger.
-    */
-  def gopherRules(docs: DataFrame, idCol: String, textCol: String)
-      : DataFrame =
-    graft.ops.TextAnalysis.gopherRules(docs, idCol, textCol)
-
   /** Online ExactSubstr span flags against a FROZEN corpus — the
     * ingest-time half of batch x100 (an arriving document sharing any
     * `k`-token span with the existing corpus is by construction a
@@ -668,8 +572,8 @@ object DocStreams {
     * stream-static per micro-batch, and the per-document rollup —
     * span hits + distinct covered token positions (overlaps unioned,
     * the x100 contract) — runs in one keyed-state pass with the
-    * standing atomic-arrival boolean guard (re-delivery emits
-    * nothing).
+    * standing atomic-arrival boolean guard ([[emitOnce]]: re-delivery
+    * emits nothing).
     *
     * ATOMIC-ARRIVAL CONTRACT (explicit, like every keyed-state op in
     * this package): each document's full text arrives in ONE
@@ -692,46 +596,19 @@ object DocStreams {
         graft.functions.HashFunctions.ngramMd5(
           split(col(corpusTextCol), " ", -1), k))).as("fp"))
       .distinct()
-    arrivalStamped(docs.select(col(idCol).as("doc_id"),
+    val spans = docs.select(col(idCol).as("doc_id"),
         posexplode(graft.functions.HashFunctions.ngramMd5(
           split(col(textCol), " ", -1), k)))
-        .toDF("doc_id", "p", "fp")
-        .join(corpusFp, "fp"))
-      .select(col("doc_id"), col("p"),
-        col("_ats"))
-      .as[(Long, Int, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (id: Long, rows: Iterator[(Long, Int, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) {
-            armIdle(state, rows.map(_._3.getTime).max, idleTtlMs)
-            Iterator.empty
-          } else {
-            state.update(true)
-            val batch = rows.toSeq
-            armIdle(state, batch.iterator.map(_._3.getTime).max, idleTtlMs)
-            val ps = batch.map(_._2).toArray
-            val covered = mutable.SortedSet.empty[Int]
-            ps.foreach(p => (p until p + k).foreach(covered += _))
-            Iterator.single(SpanHit(id, ps.length.toLong,
-              covered.size.toLong))
-          }
-      }
+      .toDF("doc_id", "p", "fp")
+      .join(corpusFp, "fp")
+      .select(col("doc_id"), col("p"))
+      .as[(Long, Int)]
+    emitOnce(spans, idleTtlMs)(_._1) {
+      (id: Long, batch: Seq[(Long, Int)]) =>
+        val covered = batch.iterator.flatMap(r => r._2 until r._2 + k)
+        SpanHit(id, batch.size.toLong, covered.toSet.size.toLong)
+    }
   }
-
-  /** Online blocklist gate — the ingest-time twin of batch x99 (stamp
-    * hit counts and the keep flag the moment a document arrives; C4
-    * drops such pages before any other stage runs).
-    * [[graft.ops.TextAnalysis.blocklistFilter]] is one stateless
-    * kernel scan over a frozen pattern literal, so it applies to a
-    * streaming frame verbatim: no state, no watermark, any trigger.
-    */
-  def blocklistFlags(docs: DataFrame, idCol: String, textCol: String,
-      patterns: Seq[String]): DataFrame =
-    graft.ops.TextAnalysis.blocklistFilter(docs, idCol, textCol, patterns)
 
   /** Online URL canonicalization — the ingest-time half of batch x90
     * (the per-domain dedup/cap stays a batch op: it needs the corpus;
@@ -746,32 +623,6 @@ object DocStreams {
       canon.as("canon_url"),
       graft.ops.UrlCanon.urlDomain(canon).as("domain"))
   }
-
-  /** Online DOMAIN blocklist gate — the ingest-time twin of batch
-    * x123 (C4/UT1 drop blocked domains at crawl intake, before any
-    * text stage runs). [[graft.ops.UrlCanon.domainBlocklistGate]] is
-    * one stateless projection (canonicalize → suffix set → intersect
-    * the frozen domain list riding the plan as a literal), so it
-    * applies to a streaming frame verbatim: no state, no watermark,
-    * any trigger — bit-equal to batch on the same arrivals.
-    */
-  def domainGateFlags(docs: DataFrame, idCol: String, urlCol: String,
-      blockedDomains: Seq[String]): DataFrame =
-    graft.ops.UrlCanon.domainBlocklistGate(docs, idCol, urlCol,
-      blockedDomains)
-
-  /** Online fill-in-the-middle rewrite — the ingest-time twin of
-    * batch x125 (rewrite documents into FIM training format as they
-    * arrive, e.g. when streaming a corpus through tokenization into
-    * training shards). [[graft.ops.DataPipeline.fimTransform]] is a
-    * stateless deterministic per-row projection (md5 coin + md5 cut
-    * draws + substr splice), so it applies to a streaming frame
-    * verbatim: no state, no watermark, any trigger — bit-equal to
-    * batch on the same arrivals.
-    */
-  def fimTransform(docs: DataFrame, idCol: String, textCol: String,
-      fimRate: Double): DataFrame =
-    graft.ops.DataPipeline.fimTransform(docs, idCol, textCol, fimRate)
 
   /** Online weighted reservoir — the ingest-time twin of batch x127,
     * and the shape Efraimidis–Spirakis was DESIGNED for (A-Res is a
@@ -839,14 +690,15 @@ object DocStreams {
     * stream-static join plus a per-pair re-delivery guard.
     *
     * A pair colliding in several bands produces several identical
-    * verified rows; per-(new, seen) one-Boolean keyed state emits the
-    * first and swallows the rest (all of a document's bands arrive in
-    * its own batch, so emission is not delayed). State follows the
-    * [[boundedDocState]] contract: `idleTtlMs` of arrival time, then
-    * the key is removed — a document re-delivered past the retention
-    * re-emits its pairs, the standard at-least-once tail. Recall per
-    * pair is the batch generator's 1−(1−j^rows)^bands regardless of
-    * batching, since banding is per-document.
+    * verified rows; per-(new, seen) one-Boolean keyed state
+    * ([[emitOnce]]) emits the first and swallows the rest (all of a
+    * document's bands arrive in its own batch, so emission is not
+    * delayed). State follows the [[boundedDocState]] contract:
+    * `idleTtlMs` of arrival time, then the key is removed — a document
+    * re-delivered past the retention re-emits its pairs, the standard
+    * at-least-once tail. Recall per pair is the batch generator's
+    * 1−(1−j^rows)^bands regardless of batching, since banding is
+    * per-document.
     *
     * Returns `(new_id, seen_id, jaccard)` with `jaccard >= minJaccard`
     * exactly verified — assembled output, deduplicated, equals the
@@ -877,30 +729,16 @@ object DocStreams {
               lit(rowsPerBand))).as("band_hash")))).as("band"))
       .select(col("new_id"), col("_na"),
         col("band.band_id"), col("band.band_hash"))
-    arrivalStamped(nb.join(sb, Seq("band_id", "band_hash"))
-        .filter(col("new_id") =!= col("seen_id"))
-        .select(col("new_id"), col("seen_id"),
-          graft.functions.VectorFunctions.setJaccardSorted(
-            col("_na"), col("_sa")).as("jaccard"))
-        .filter(col("jaccard") >= minJaccard))
-      .select(col("new_id"), col("seen_id"), col("jaccard"), col("_ats"))
-      .as[(Long, Long, Double, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (pair: (Long, Long),
-            rs: Iterator[(Long, Long, Double, java.sql.Timestamp)],
-            state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = rs.toSeq
-            armIdle(state, batch.iterator.map(_._4.getTime).max, idleTtlMs)
-            if (state.exists) Iterator.empty
-            else {
-              state.update(true)
-              Iterator.single(IngestPair(pair._1, pair._2, batch.head._3))
-            }
-          }
-      }
+    val verified = nb.join(sb, Seq("band_id", "band_hash"))
+      .filter(col("new_id") =!= col("seen_id"))
+      .select(col("new_id"), col("seen_id"),
+        graft.functions.VectorFunctions.setJaccardSorted(
+          col("_na"), col("_sa")).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
+      .as[(Long, Long, Double)]
+    emitOnce(verified, idleTtlMs)(r => (r._1, r._2)) {
+      (pair: (Long, Long), batch: Seq[(Long, Long, Double)]) =>
+        IngestPair(pair._1, pair._2, batch.head._3)
+    }
   }
 }

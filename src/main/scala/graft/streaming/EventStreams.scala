@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder,
+  KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -43,20 +46,23 @@ object EventStreams {
     * history under `NoTimeout`, so one hammered key grew without
     * bound), and since r17 uniformly by the remaining keyed twins
     * (VERDICT r16 item 3 — per-key state was tiny but the KEY
-    * population grew with every user ever seen): [[retentionOnline]]
-    * and [[activeDaysOnline]] follow the two-phase collapse-then-
-    * remove below (retention's cohort day survives the collapse, so
-    * post-return days keep their original attribution), while the
-    * O(1)-state [[conversionLagOnline]] and [[entryTypeOnline]] have
-    * no history to collapse and use single-phase removal at the same
-    * terminal horizon (last event + 2 × TTL):
+    * population grew with every user ever seen): the calendar twins
+    * ([[retentionOnline]], [[activeDaysOnline]], [[activeWeeksOnline]])
+    * follow the two-phase collapse-then-remove below (retention's
+    * cohort day survives the collapse, so post-return days keep their
+    * original attribution), while the O(1)-state
+    * [[conversionLagOnline]], [[entryTypeOnline]] and
+    * [[statefulUserTotals]] have no history to collapse and use
+    * single-phase removal at the same terminal horizon (last event +
+    * 2 × TTL). [[keyedByUser]] is the one place
+    * this policy lives:
     *
-    *  - **History cap** (`maxEventsPerUser`): per-user retained
-    *    history is capped; past the cap the OLDEST events are dropped
-    *    (the recent-window semantics — funnel keeps the EARLIEST
-    *    times per step instead, since its fold consumes earliest
-    *    chains). Within the cap, emissions are exact; a trim drops
-    *    the trimmed events' contribution from the NEXT emission.
+    *  - **History cap** (`maxEventsPerUser`, [[history]]): per-user
+    *    retained history is capped; past the cap the OLDEST events are
+    *    dropped (the recent-window semantics — funnel keeps the
+    *    EARLIEST times per step instead, since its fold consumes
+    *    earliest chains). Within the cap, emissions are exact; a trim
+    *    drops the trimmed events' contribution from the NEXT emission.
     *  - **Idle collapse** (`idleTtlUs`, via
     *    `GroupStateTimeout.EventTimeTimeout`): when the watermark
     *    passes a user's last event + TTL, the history is dropped but
@@ -77,33 +83,122 @@ object EventStreams {
     * timeout are inert, and the specs' fixtures sit far inside the
     * default cap/TTL, so batch ≡ stream stays EXACT within the
     * bounded window (StreamingSpec pins both the equivalence and the
-    * cap/collapse paths).
+    * cap/collapse/removal paths).
     */
   private[streaming] def boundedStateDoc(): Unit = ()
 
-  /** Timeout branch shared by the keyed-state twins: first fire
-    * collapses the history to the bare version counter and re-arms
-    * one more horizon; second consecutive fire (still empty) removes
-    * the key outright — [[boundedStateDoc]].
+  /** The one keyed-state skeleton of this object ([[boundedStateDoc]]).
+    * State per user is `(version, payload)`. A data batch runs
+    * `fold(stored payload, this batch's rows)` — the new payload and
+    * the user's last event time (micros) — bumps the version, stores
+    * both, arms the idle timer and emits `emit(user, version,
+    * payload)`. With `collapse`, the timer is armed at last event +
+    * TTL; its first fire replaces the payload by `collapse(payload)`
+    * (version kept) and re-arms one more horizon past the watermark,
+    * and a fire that finds nothing left to collapse removes the key.
+    * Without it (O(1) payloads), the timer is armed at last event +
+    * 2 × TTL and its fire removes the key. The last event time is at
+    * or past the watermark (the user has ≥ 1 row this batch), so the
+    * timestamp is always legal; timers are inert in batch execution.
     */
-  private def onIdle[S](state: GroupState[(Long, S)], emptyHist: S,
-      isEmpty: S => Boolean, idleTtlUs: Long): Unit = {
-    val (ver, hist) = state.get
-    if (isEmpty(hist)) state.remove()
-    else {
-      state.update((ver, emptyHist))
-      state.setTimeoutTimestamp(
-        state.getCurrentWatermarkMs() + idleTtlUs / 1000L)
+  private def keyedByUser[R, H, U](users: KeyValueGroupedDataset[Long, R],
+      idleTtlUs: Long, collapse: Option[H => H])(
+      fold: (Option[H], Seq[R]) => (H, Long))(
+      emit: (Long, Long, H) => Iterator[U])(
+      implicit stateEnc: Encoder[(Long, H)], outEnc: Encoder[U])
+      : Dataset[U] = {
+    val horizonMs = (if (collapse.isDefined) 1L else 2L) * idleTtlUs / 1000L
+    users.flatMapGroupsWithState(
+      OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
+      (uid: Long, rows: Iterator[R], state: GroupState[(Long, H)]) =>
+        if (state.hasTimedOut) {
+          val (ver, h) = state.get
+          collapse.map(_(h)).filter(_ != h) match {
+            case Some(idle) =>
+              state.update((ver, idle))
+              state.setTimeoutTimestamp(
+                state.getCurrentWatermarkMs() + idleTtlUs / 1000L)
+            case None => state.remove()
+          }
+          Iterator.empty
+        } else {
+          val prev = state.getOption
+          val (h, lastUs) = fold(prev.map(_._2), rows.toSeq)
+          val nv = prev.fold(0L)(_._1) + 1
+          state.update((nv, h))
+          state.setTimeoutTimestamp(lastUs / 1000L + horizonMs)
+          emit(uid, nv, h)
+        }
     }
   }
 
-  /** Arms the idle timer at (user's max event time + TTL). The user
-    * has ≥ 1 row this batch, so `maxTUs` is at or past the watermark
-    * and the timestamp is always legal. No-op in batch execution.
+  /** The history twins' payload: the user's distinct events (`event`
+    * of each row) sorted by `order`, capped at the newest
+    * `maxEventsPerUser` ([[boundedStateDoc]]); `time` is an event's
+    * micros, and the collapse drops the whole history.
     */
-  private def armIdleTimer(state: GroupState[_], maxTUs: Long,
-      idleTtlUs: Long): Unit =
-    state.setTimeoutTimestamp(maxTUs / 1000L + idleTtlUs / 1000L)
+  private def history[R, E, O, U](
+      users: KeyValueGroupedDataset[Long, R], idleTtlUs: Long,
+      maxEventsPerUser: Int)(event: R => E)(order: E => O,
+      time: E => Long)(emit: (Long, Long, Seq[E]) => Iterator[U])(
+      implicit ord: Ordering[O], stateEnc: Encoder[(Long, Seq[E])],
+      outEnc: Encoder[U]): Dataset[U] =
+    keyedByUser(users, idleTtlUs, Some((_: Seq[E]) => Seq.empty[E])) {
+      (prev, batch) =>
+        val seen = (prev.getOrElse(Seq.empty).iterator ++
+            batch.iterator.map(event))
+          .toSeq.distinct.sortBy(order).takeRight(maxEventsPerUser)
+        (seen, seen.iterator.map(time).max)
+    }(emit)
+
+  /** [[history]] over (t micros, event_id, type) in the batch ops'
+    * exact (ts, id) total order — the state of the transition and
+    * inter-arrival twins. `ts` rides along untouched: the
+    * EventTimeTimeout checker needs the WATERMARKED column (its
+    * metadata) in the state operator's input.
+    */
+  private def typedHistory[U: Encoder](events: DataFrame,
+      watermarkDelay: String, maxEventsPerUser: Int, idleTtlUs: Long)(
+      emit: (Long, Long, Seq[(Long, Long, String)]) => Iterator[U])
+      : Dataset[U] = {
+    import events.sparkSession.implicits._
+    val rows = events.withWatermark("ts", watermarkDelay)
+      .select(col("user_id"), expr("unix_micros(ts)").as("t"),
+        col("event_id"), col("event_type"), col("ts"))
+      .as[(Long, Long, Long, String, java.sql.Timestamp)]
+    history(rows.groupByKey(_._1), idleTtlUs, maxEventsPerUser)(
+      r => (r._2, r._3, r._4))(e => (e._1, e._2), _._1)(emit)
+  }
+
+  /** Per-user rows `(user, calendar unit, t micros, ts)` for the
+    * calendar twins; `unit` is the unit column (epoch day or week).
+    */
+  private def calendarRows(events: DataFrame, watermarkDelay: String,
+      unit: Column)
+      : KeyValueGroupedDataset[Long, (Long, Long, Long, java.sql.Timestamp)] = {
+    import events.sparkSession.implicits._
+    events.withWatermark("ts", watermarkDelay)
+      .select(col("user_id"), unit.as("unit"),
+        expr("unix_micros(ts)").as("t"), col("ts"))
+      .as[(Long, Long, Long, java.sql.Timestamp)]
+      .groupByKey(_._1)
+  }
+
+  /** The calendar twins' fold: the sorted distinct union of the stored
+    * units and this batch's, and the batch's last event time.
+    */
+  private def unitSet(stored: Seq[Long],
+      batch: Seq[(Long, Long, Long, java.sql.Timestamp)])
+      : (Seq[Long], Long) =
+    ((stored.iterator ++ batch.iterator.map(_._2)).toSet.toSeq.sorted,
+      batch.iterator.map(_._3).max)
+
+  /** Base-2 bucket of a gap in seconds: 0 for dt ≤ 0, else its bit
+    * length (`64 − nlz(dt)` ≡ the batch ops' `length(bin(dt))`).
+    */
+  private def log2Bucket(dt: Long): Long =
+    if (dt <= 0L) 0L
+    else (64 - java.lang.Long.numberOfLeadingZeros(dt)).toLong
 
   /** Schema of the events stream. `ts` is TimestampType (not NTZ):
     * Structured Streaming watermarks require an instant-typed event time.
@@ -200,43 +295,20 @@ object EventStreams {
       watermarkDelay: String = DefaultWatermarkDelay,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[RetentionRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"),
-        (unix_timestamp(date_trunc("day", col("ts"))) / 86400L)
-          .cast(LongType).as("d"),
-        expr("unix_micros(ts)").as("t"), col("ts"))
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long,
-            java.sql.Timestamp)],
-            state: GroupState[(Long, Long, Seq[Long])]) =>
-          if (state.hasTimedOut) {
-            val (ver, first, seen) = state.get
-            if (seen.isEmpty) state.remove()
-            else {
-              state.update((ver, first, Seq.empty))
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + idleTtlUs / 1000L)
-            }
-            Iterator.empty
-          } else {
-          val (ver, first0, seen0) = state.getOption.getOrElse(
-            (0L, Long.MaxValue, Seq.empty[Long]))
-          val batch = rows.toSeq
-          val seen = (seen0.iterator ++ batch.iterator.map(_._2))
-            .toSet.toSeq.sorted
-          // the cohort day survives an idle collapse: min over the
-          // STORED first too, not just the retained day set
-          val first = math.min(first0, seen.head)
-          val nv = ver + 1
-          state.update((nv, first, seen))
-          armIdleTimer(state, batch.iterator.map(_._3).max, idleTtlUs)
-          seen.iterator.map(d => RetentionRow(uid, nv, first, d - first))
-          }
-      }
+    val day = (unix_timestamp(date_trunc("day", col("ts"))) / 86400L)
+      .cast(LongType)
+    keyedByUser(calendarRows(events, watermarkDelay, day), idleTtlUs,
+      Some((h: (Long, Seq[Long])) => (h._1, Seq.empty[Long]))) {
+      (prev, batch) =>
+        val (first0, days0) =
+          prev.getOrElse((Long.MaxValue, Seq.empty[Long]))
+        val (days, lastUs) = unitSet(days0, batch)
+        // the cohort day survives an idle collapse: min over the
+        // STORED first too, not just the retained day set
+        ((math.min(first0, days.head), days), lastUs)
+    } { case (uid, nv, (first, days)) =>
+      days.iterator.map(d => RetentionRow(uid, nv, first, d - first))
+    }
   }
 
   /** ONLINE ordered-funnel tracking — the ingest-time twin of batch
@@ -271,45 +343,33 @@ object EventStreams {
     import events.sparkSession.implicits._
     val stepIdx = steps.zipWithIndex.toMap
     val k = steps.size
-    events
+    val empty = Seq.fill(k)(Seq.empty[Long])
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .filter(col("event_type").isin(steps: _*))
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(ts)").as("t"), col("ts"))
       .as[(Long, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[Seq[Long]])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.fill(k)(Seq.empty[Long]),
-              (s: Seq[Seq[Long]]) => s.forall(_.isEmpty), idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.fill(k)(Seq.empty[Long])))
-          val sets = seen0.map(s =>
-            scala.collection.mutable.SortedSet.empty[Long] ++ s)
-          rows.foreach { case (_, et, t, _) => sets(stepIdx(et)) += t }
-          val seen = sets.map(_.toSeq.take(maxEventsPerUser))
-          var reached = 0
-          var last = Long.MinValue
-          var i = 0
-          var stuck = false
-          while (i < k && !stuck) {
-            seen(i).find(_ > last) match {
-              case Some(t) => reached = i + 1; last = t; i += 1
-              case None => stuck = true
-            }
-          }
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.iterator.flatten.max, idleTtlUs)
-          Iterator(FunnelStepRow(uid, nv, reached.toLong))
-          }
+    keyedByUser(rows.groupByKey(_._1), idleTtlUs,
+      Some((_: Seq[Seq[Long]]) => empty)) { (prev, batch) =>
+      val sets = prev.getOrElse(empty)
+        .map(s => mutable.SortedSet.empty[Long] ++ s)
+      batch.foreach { case (_, et, t, _) => sets(stepIdx(et)) += t }
+      val seen = sets.map(_.toSeq.take(maxEventsPerUser))
+      (seen, seen.iterator.flatten.max)
+    } { (uid, nv, seen) =>
+      var reached = 0
+      var last = Long.MinValue
+      var i = 0
+      var stuck = false
+      while (i < k && !stuck) {
+        seen(i).find(_ > last) match {
+          case Some(t) => reached = i + 1; last = t; i += 1
+          case None => stuck = true
+        }
       }
+      Iterator(FunnelStepRow(uid, nv, reached.toLong))
+    }
   }
 
   /** ONLINE inter-arrival spectrum — the ingest-time twin of batch
@@ -330,7 +390,7 @@ object EventStreams {
     * a late event splits an existing gap in two and re-attributes the
     * earlier gap's type — the next emission supersedes every prior
     * row (the retentionOnline convention). The bucket is the same
-    * bit-length grid (`64 − nlz(dt)` ≡ `length(bin(dt))`).
+    * bit-length grid ([[log2Bucket]]).
     *
     * State per user is their own event history (three 8-byte words +
     * the type tag per event), bounded by [[boundedStateDoc]]'s r16
@@ -341,56 +401,21 @@ object EventStreams {
       maxEventsPerUser: Int = DefaultMaxEventsPerUser,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[SpectrumRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      // `ts` rides along untouched: the EventTimeTimeout checker needs
-      // the WATERMARKED column (its metadata) in the state operator's
-      // input — the lambda ignores it
-      .select(col("user_id"), expr("unix_micros(ts)").as("t"),
-        col("event_id"), col("event_type"), col("ts"))
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, String,
-              java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long, String)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long, String)],
-              (s: Seq[(Long, Long, String)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long, String)]))
-          val merged = (seen0.iterator ++ rows.map(r => (r._2, r._3, r._4)))
-            .toSeq.distinct.sortBy(e => (e._1, e._2))
-          // cap: retain the NEWEST maxEventsPerUser (recent-window
-          // drop semantics — boundedStateDoc)
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.last._1, idleTtlUs)
-          val counts =
-            scala.collection.mutable.Map.empty[(String, Long), Long]
-          seen.iterator.sliding(2).withPartial(false).foreach { pair =>
-            val a = pair.head
-            // batch gap semantics: difference of TRUNCATED seconds
-            // (unix_timestamp), even though the ORDER is full-micros
-            val dt = Math.floorDiv(pair(1)._1, 1000000L) -
-              Math.floorDiv(a._1, 1000000L)
-            val bucket =
-              if (dt <= 0L) 0L
-              else (64 - java.lang.Long.numberOfLeadingZeros(dt)).toLong
-            counts((a._3, bucket)) =
-              counts.getOrElse((a._3, bucket), 0L) + 1L
-          }
-          counts.iterator.map { case ((et, bkt), n) =>
-            SpectrumRow(uid, nv, et, bkt, n)
-          }
-          }
-      }
+    typedHistory(events, watermarkDelay, maxEventsPerUser, idleTtlUs) {
+      (uid, nv, seen) =>
+        val counts = mutable.Map.empty[(String, Long), Long]
+        seen.iterator.sliding(2).withPartial(false).foreach { pair =>
+          val a = pair.head
+          // batch gap semantics: difference of TRUNCATED seconds
+          // (unix_timestamp), even though the ORDER is full-micros
+          val k = (a._3, log2Bucket(Math.floorDiv(pair(1)._1, 1000000L) -
+            Math.floorDiv(a._1, 1000000L)))
+          counts(k) = counts.getOrElse(k, 0L) + 1L
+        }
+        counts.iterator.map { case ((et, bkt), n) =>
+          SpectrumRow(uid, nv, et, bkt, n)
+        }
+    }
   }
 
   /** ONLINE transition matrix — the ingest-time twin of batch x138
@@ -418,46 +443,17 @@ object EventStreams {
       maxEventsPerUser: Int = DefaultMaxEventsPerUser,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[TransitionRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      // `ts` rides along untouched: the EventTimeTimeout checker needs
-      // the WATERMARKED column (its metadata) in the state operator's
-      // input — the lambda ignores it
-      .select(col("user_id"), expr("unix_micros(ts)").as("t"),
-        col("event_id"), col("event_type"), col("ts"))
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, String,
-              java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long, String)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long, String)],
-              (s: Seq[(Long, Long, String)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long, String)]))
-          val merged = (seen0.iterator ++ rows.map(r => (r._2, r._3, r._4)))
-            .toSeq.distinct.sortBy(e => (e._1, e._2))
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.last._1, idleTtlUs)
-          val counts =
-            scala.collection.mutable.Map.empty[(String, String), Long]
-          seen.iterator.sliding(2).withPartial(false).foreach { pair =>
-            val k = (pair.head._3, pair(1)._3)
-            counts(k) = counts.getOrElse(k, 0L) + 1L
-          }
-          counts.iterator.map { case ((ft, tt), n) =>
-            TransitionRow(uid, nv, ft, tt, n)
-          }
-          }
-      }
+    typedHistory(events, watermarkDelay, maxEventsPerUser, idleTtlUs) {
+      (uid, nv, seen) =>
+        val counts = mutable.Map.empty[(String, String), Long]
+        seen.iterator.sliding(2).withPartial(false).foreach { pair =>
+          val k = (pair.head._3, pair(1)._3)
+          counts(k) = counts.getOrElse(k, 0L) + 1L
+        }
+        counts.iterator.map { case ((ft, tt), n) =>
+          TransitionRow(uid, nv, ft, tt, n)
+        }
+    }
   }
 
   /** ONLINE Markov-2 transitions — the ingest-time twin of batch x175
@@ -476,43 +472,17 @@ object EventStreams {
       maxEventsPerUser: Int = DefaultMaxEventsPerUser,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[Transition2Row] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), expr("unix_micros(ts)").as("t"),
-        col("event_id"), col("event_type"), col("ts"))
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, String,
-              java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long, String)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long, String)],
-              (s: Seq[(Long, Long, String)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long, String)]))
-          val merged = (seen0.iterator ++ rows.map(r => (r._2, r._3, r._4)))
-            .toSeq.distinct.sortBy(e => (e._1, e._2))
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.last._1, idleTtlUs)
-          val counts = scala.collection.mutable
-            .Map.empty[(String, String, String), Long]
-          seen.iterator.sliding(3).withPartial(false).foreach { tri =>
-            val k = (tri.head._3, tri(1)._3, tri(2)._3)
-            counts(k) = counts.getOrElse(k, 0L) + 1L
-          }
-          counts.iterator.map { case ((p2, p1, nt), n) =>
-            Transition2Row(uid, nv, p2, p1, nt, n)
-          }
-          }
-      }
+    typedHistory(events, watermarkDelay, maxEventsPerUser, idleTtlUs) {
+      (uid, nv, seen) =>
+        val counts = mutable.Map.empty[(String, String, String), Long]
+        seen.iterator.sliding(3).withPartial(false).foreach { tri =>
+          val k = (tri.head._3, tri(1)._3, tri(2)._3)
+          counts(k) = counts.getOrElse(k, 0L) + 1L
+        }
+        counts.iterator.map { case ((p2, p1, nt), n) =>
+          Transition2Row(uid, nv, p2, p1, nt, n)
+        }
+    }
   }
 
   /** ONLINE transition latency — the ingest-time twin of batch x185
@@ -537,45 +507,19 @@ object EventStreams {
       idleTtlUs: Long = DefaultIdleTtlUs)
       : Dataset[TransitionLatencyRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), expr("unix_micros(ts)").as("t"),
-        col("event_id"), col("event_type"), col("ts"))
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, String,
-              java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long, String)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long, String)],
-              (s: Seq[(Long, Long, String)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long, String)]))
-          val merged = (seen0.iterator ++ rows.map(r => (r._2, r._3, r._4)))
-            .toSeq.distinct.sortBy(e => (e._1, e._2))
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.last._1, idleTtlUs)
-          val acc = scala.collection.mutable
-            .Map.empty[(String, String), (Long, Long, Long)]
-          seen.iterator.sliding(2).withPartial(false).foreach { pair =>
-            val k = (pair.head._3, pair(1)._3)
-            val gap = pair(1)._1 - pair.head._1
-            val (n, sg, mg) = acc.getOrElse(k, (0L, 0L, 0L))
-            acc(k) = (n + 1L, sg + gap, math.max(mg, gap))
-          }
-          acc.iterator.map { case ((ft, tt), (n, sg, mg)) =>
-            TransitionLatencyRow(uid, nv, ft, tt, n, sg, mg)
-          }
-          }
-      }
+    typedHistory(events, watermarkDelay, maxEventsPerUser, idleTtlUs) {
+      (uid, nv, seen) =>
+        val acc = mutable.Map.empty[(String, String), (Long, Long, Long)]
+        seen.iterator.sliding(2).withPartial(false).foreach { pair =>
+          val k = (pair.head._3, pair(1)._3)
+          val gap = pair(1)._1 - pair.head._1
+          val (n, sg, mg) = acc.getOrElse(k, (0L, 0L, 0L))
+          acc(k) = (n + 1L, sg + gap, math.max(mg, gap))
+        }
+        acc.iterator.map { case ((ft, tt), (n, sg, mg)) =>
+          TransitionLatencyRow(uid, nv, ft, tt, n, sg, mg)
+        }
+    }
   }
 
   /** ONLINE conversion lag — the ingest-time twin of batch x158
@@ -583,7 +527,8 @@ object EventStreams {
     * keyed state is O(1) — the version counter plus two running mins
     * (first event time, first `target` event time, micros) — the
     * statefulUserTotals bounded-state class, so no history cap or
-    * idle collapse is needed. Each update re-emits the user's current
+    * idle collapse is needed (single-phase removal,
+    * [[boundedStateDoc]]). Each update re-emits the user's current
     * base-2 lag bucket with a monotone `version` stamp; `bucket` is
     * −1 while the user has not converted (the explicit
     * not-yet-converted marker, so a LATE earlier event that changes
@@ -605,48 +550,25 @@ object EventStreams {
       : Dataset[ConversionLagRow] = {
     import events.sparkSession.implicits._
     val NoTc = Long.MaxValue
-    events
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), expr("unix_micros(ts)").as("t"),
         (col("event_type") === target).as("is_target"), col("ts"))
       .as[(Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Boolean,
-            java.sql.Timestamp)],
-            state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            // O(1) state has no history to collapse, so the idle
-            // contract is single-phase: removal at the boundedStateDoc
-            // 2×TTL expiry horizon (the timer is armed at last event +
-            // 2×TTL below). The user's contribution stays frozen
-            // downstream at their max-version row.
-            state.remove()
-            Iterator.empty
-          } else {
-          var (ver, t0, tc) = state.getOption.getOrElse(
-            (0L, Long.MaxValue, NoTc))
-          var mt = Long.MinValue
-          rows.foreach { case (_, t, isTarget, _) =>
-            if (t < t0) t0 = t
-            if (isTarget && t < tc) tc = t
-            if (t > mt) mt = t
-          }
-          val nv = ver + 1
-          state.update((nv, t0, tc))
-          armIdleTimer(state, mt, 2L * idleTtlUs)
-          val bucket =
-            if (tc == NoTc) -1L
-            else {
-              val dt = Math.floorDiv(tc, 1000000L) -
-                Math.floorDiv(t0, 1000000L)
-              if (dt <= 0L) 0L
-              else (64 - java.lang.Long.numberOfLeadingZeros(dt)).toLong
-            }
-          Iterator(ConversionLagRow(uid, nv, bucket))
-          }
-      }
+    keyedByUser(rows.groupByKey(_._1), idleTtlUs, None) {
+      (prev: Option[(Long, Long)], batch) =>
+        var (t0, tc) = prev.getOrElse((Long.MaxValue, NoTc))
+        batch.foreach { case (_, t, isTarget, _) =>
+          if (t < t0) t0 = t
+          if (isTarget && t < tc) tc = t
+        }
+        ((t0, tc), batch.iterator.map(_._2).max)
+    } { case (uid, nv, (t0, tc)) =>
+      Iterator(ConversionLagRow(uid, nv,
+        if (tc == NoTc) -1L
+        else log2Bucket(Math.floorDiv(tc, 1000000L) -
+          Math.floorDiv(t0, 1000000L))))
+    }
   }
 
   /** ONLINE entry-type attribution — the ingest-time twin of batch
@@ -667,40 +589,26 @@ object EventStreams {
       idleTtlUs: Long = DefaultIdleTtlUs)
       : Dataset[EntryTypeRow] = {
     import events.sparkSession.implicits._
-    events
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), expr("unix_micros(ts)").as("t"),
         col("event_id"), col("event_type"),
         (col("event_type") === target).as("is_target"), col("ts"))
       .as[(Long, Long, Long, String, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long, String,
-            Boolean, java.sql.Timestamp)],
-            state: GroupState[(Long, Long, Long, String, Boolean)]) =>
-          if (state.hasTimedOut) {
-            // O(1) state: single-phase removal at the 2×TTL expiry
-            // horizon (the conversionLagOnline contract)
-            state.remove()
-            Iterator.empty
-          } else {
-          var (ver, ft, fid, fty, conv) = state.getOption.getOrElse(
-            (0L, Long.MaxValue, Long.MaxValue, "", false))
-          var mt = Long.MinValue
-          rows.foreach { case (_, t, id, ty, isT, _) =>
-            if (t < ft || (t == ft && id < fid)) {
-              ft = t; fid = id; fty = ty
-            }
-            if (isT) conv = true
-            if (t > mt) mt = t
+    keyedByUser(rows.groupByKey(_._1), idleTtlUs, None) {
+      (prev: Option[(Long, Long, String, Boolean)], batch) =>
+        var (ft, fid, fty, conv) =
+          prev.getOrElse((Long.MaxValue, Long.MaxValue, "", false))
+        batch.foreach { case (_, t, id, ty, isT, _) =>
+          if (t < ft || (t == ft && id < fid)) {
+            ft = t; fid = id; fty = ty
           }
-          val nv = ver + 1
-          state.update((nv, ft, fid, fty, conv))
-          armIdleTimer(state, mt, 2L * idleTtlUs)
-          Iterator(EntryTypeRow(uid, nv, fty, if (conv) 1L else 0L))
-          }
-      }
+          if (isT) conv = true
+        }
+        ((ft, fid, fty, conv), batch.iterator.map(_._2).max)
+    } { case (uid, nv, (_, _, fty, conv)) =>
+      Iterator(EntryTypeRow(uid, nv, fty, if (conv) 1L else 0L))
+    }
   }
 
   /** ONLINE per-user activity calendar — the ingest-time twin of
@@ -729,35 +637,12 @@ object EventStreams {
       watermarkDelay: String = DefaultWatermarkDelay,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[ActiveDayRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"),
-        (unix_timestamp(date_trunc("day", col("ts"))) / 86400L)
-          .cast(LongType).as("d"),
-        expr("unix_micros(ts)").as("t"), col("ts"))
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long,
-            java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[Long])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[Long],
-              (s: Seq[Long]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[Long]))
-          val batch = rows.toSeq
-          val seen = (seen0.iterator ++ batch.iterator.map(_._2))
-            .toSet.toSeq.sorted
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, batch.iterator.map(_._3).max, idleTtlUs)
-          seen.iterator.map(d => ActiveDayRow(uid, nv, d))
-          }
-      }
+    val day = (unix_timestamp(date_trunc("day", col("ts"))) / 86400L)
+      .cast(LongType)
+    keyedByUser(calendarRows(events, watermarkDelay, day), idleTtlUs,
+      Some((_: Seq[Long]) => Seq.empty[Long])) { (prev, batch) =>
+      unitSet(prev.getOrElse(Seq.empty), batch)
+    } { (uid, nv, days) => days.iterator.map(ActiveDayRow(uid, nv, _)) }
   }
 
   /** ONLINE session-length histogram — the ingest-time twin of batch
@@ -785,56 +670,37 @@ object EventStreams {
       maxEventsPerUser: Int = DefaultMaxEventsPerUser,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[SessionLenRow] = {
     import events.sparkSession.implicits._
-    events
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("t"), col("ts"))
       .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long)],
-              (s: Seq[(Long, Long)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long)]))
-          val merged = (seen0.iterator ++ rows.map(r => (r._2, r._3)))
-            .toSeq.distinct.sortBy(_._1)
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.iterator.map(_._2).max, idleTtlUs)
-          // fold sessions in event_id order, breaking on time gaps;
-          // duration is max−min of the session's timestamps (the id
-          // order need not be time-monotonic — the batch op's
-          // max(tus)−min(tus) semantics)
-          val hist =
-            scala.collection.mutable.Map.empty[Long, (Long, Long)]
-          var n = 0L; var tMin = 0L; var tMax = 0L; var tPrev = 0L
-          def close(): Unit = if (n > 0) {
-            val (c, d) = hist.getOrElse(n, (0L, 0L))
-            hist(n) = (c + 1L, d + (tMax - tMin))
+    history(rows.groupByKey(_._1), idleTtlUs, maxEventsPerUser)(
+      r => (r._2, r._3))(_._1, _._2) {
+      (uid, nv, seen) =>
+        // fold sessions in event_id order, breaking on time gaps;
+        // duration is max−min of the session's timestamps (the id
+        // order need not be time-monotonic — the batch op's
+        // max(tus)−min(tus) semantics)
+        val hist = mutable.Map.empty[Long, (Long, Long)]
+        var n = 0L; var tMin = 0L; var tMax = 0L; var tPrev = 0L
+        def close(): Unit = if (n > 0) {
+          val (c, d) = hist.getOrElse(n, (0L, 0L))
+          hist(n) = (c + 1L, d + (tMax - tMin))
+        }
+        seen.foreach { case (_, t) =>
+          if (n == 0L || t - tPrev > gapUs) {
+            close(); n = 0L; tMin = t; tMax = t
           }
-          seen.foreach { case (_, t) =>
-            if (n == 0L || t - tPrev > gapUs) {
-              close(); n = 0L; tMin = t; tMax = t
-            }
-            n += 1L; tPrev = t
-            if (t < tMin) tMin = t
-            if (t > tMax) tMax = t
-          }
-          close()
-          hist.iterator.map { case (len, (c, d)) =>
-            SessionLenRow(uid, nv, len, c, d)
-          }
-          }
-      }
+          n += 1L; tPrev = t
+          if (t < tMin) tMin = t
+          if (t > tMax) tMax = t
+        }
+        close()
+        hist.iterator.map { case (len, (c, d)) =>
+          SessionLenRow(uid, nv, len, c, d)
+        }
+    }
   }
 
   /** ONLINE bounce tracking — the ingest-time twin of batch x192
@@ -864,55 +730,34 @@ object EventStreams {
       maxEventsPerUser: Int = DefaultMaxEventsPerUser,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[BounceRow] = {
     import events.sparkSession.implicits._
-    events
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("t"), col("event_type"), col("ts"))
       .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long,
-            rows: Iterator[(Long, Long, Long, String,
-              java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(Long, Long, String)])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[(Long, Long, String)],
-              (s: Seq[(Long, Long, String)]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(Long, Long, String)]))
-          val merged = (seen0.iterator ++
-            rows.map(r => (r._2, r._3, r._4)))
-            .toSeq.distinct.sortBy(_._1)
-          val seen = if (merged.size > maxEventsPerUser)
-            merged.takeRight(maxEventsPerUser) else merged
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, seen.iterator.map(_._2).max, idleTtlUs)
-          // fold sessions in event_id order breaking on time gaps;
-          // the entry type is the FIRST event's (min event_id — the
-          // batch struct-min over unique ids), bounce = length 1
-          val per = scala.collection.mutable
-            .Map.empty[String, (Long, Long)]
-          var n = 0L; var tPrev = 0L; var entry = ""
-          def close(): Unit = if (n > 0) {
-            val (s, b) = per.getOrElse(entry, (0L, 0L))
-            per(entry) = (s + 1L, b + (if (n == 1L) 1L else 0L))
+    history(rows.groupByKey(_._1), idleTtlUs, maxEventsPerUser)(
+      r => (r._2, r._3, r._4))(_._1, _._2) {
+      (uid, nv, seen) =>
+        // fold sessions in event_id order breaking on time gaps;
+        // the entry type is the FIRST event's (min event_id — the
+        // batch struct-min over unique ids), bounce = length 1
+        val per = mutable.Map.empty[String, (Long, Long)]
+        var n = 0L; var tPrev = 0L; var entry = ""
+        def close(): Unit = if (n > 0) {
+          val (s, b) = per.getOrElse(entry, (0L, 0L))
+          per(entry) = (s + 1L, b + (if (n == 1L) 1L else 0L))
+        }
+        seen.foreach { case (_, t, ty) =>
+          if (n == 0L || t - tPrev > gapUs) {
+            close(); n = 0L; entry = ty
           }
-          seen.foreach { case (_, t, ty) =>
-            if (n == 0L || t - tPrev > gapUs) {
-              close(); n = 0L; entry = ty
-            }
-            n += 1L; tPrev = t
-          }
-          close()
-          per.iterator.map { case (ty, (s, b)) =>
-            BounceRow(uid, nv, ty, s, b)
-          }
-          }
-      }
+          n += 1L; tPrev = t
+        }
+        close()
+        per.iterator.map { case (ty, (s, b)) =>
+          BounceRow(uid, nv, ty, s, b)
+        }
+    }
   }
 
   /** ONLINE weekly-activity calendar — the ingest-time twin feeding
@@ -935,34 +780,11 @@ object EventStreams {
       watermarkDelay: String = DefaultWatermarkDelay,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[ActiveWeekRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"),
-        expr("unix_micros(date_trunc('week', ts))").as("w"),
-        expr("unix_micros(ts)").as("t"), col("ts"))
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long,
-            java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[Long])]) =>
-          if (state.hasTimedOut) {
-            onIdle(state, Seq.empty[Long],
-              (s: Seq[Long]) => s.isEmpty, idleTtlUs)
-            Iterator.empty
-          } else {
-          val (ver, seen0) = state.getOption.getOrElse(
-            (0L, Seq.empty[Long]))
-          val batch = rows.toSeq
-          val seen = (seen0.iterator ++ batch.iterator.map(_._2))
-            .toSet.toSeq.sorted
-          val nv = ver + 1
-          state.update((nv, seen))
-          armIdleTimer(state, batch.iterator.map(_._3).max, idleTtlUs)
-          seen.iterator.map(w => ActiveWeekRow(uid, nv, w))
-          }
-      }
+    val week = expr("unix_micros(date_trunc('week', ts))")
+    keyedByUser(calendarRows(events, watermarkDelay, week), idleTtlUs,
+      Some((_: Seq[Long]) => Seq.empty[Long])) { (prev, batch) =>
+      unitSet(prev.getOrElse(Seq.empty), batch)
+    } { (uid, nv, weeks) => weeks.iterator.map(ActiveWeekRow(uid, nv, _)) }
   }
 
   /** Running totals per user carried in CUSTOM keyed state
@@ -980,32 +802,17 @@ object EventStreams {
       watermarkDelay: String = DefaultWatermarkDelay,
       idleTtlUs: Long = DefaultIdleTtlUs): Dataset[UserTotals] = {
     import events.sparkSession.implicits._
-    events
+    val rows = events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("t"), col("ts"))
       .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long,
-            java.sql.Timestamp)],
-            state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-          var (n, s) = state.getOption.getOrElse((0L, 0L))
-          var mt = Long.MinValue
-          rows.foreach { case (_, eid, t, _) =>
-            n += 1; s += eid
-            if (t > mt) mt = t
-          }
-          state.update((n, s))
-          armIdleTimer(state, mt, 2L * idleTtlUs)
-          Iterator(UserTotals(uid, n, s))
-          }
-      }
+    keyedByUser(rows.groupByKey(_._1), idleTtlUs, None) {
+      (prev: Option[(Long, Long)], batch) =>
+        val (n, s) = prev.getOrElse((0L, 0L))
+        ((n + batch.size, s + batch.iterator.map(_._2).sum),
+          batch.iterator.map(_._3).max)
+    } { case (uid, _, (n, s)) => Iterator(UserTotals(uid, n, s)) }
   }
 }
 

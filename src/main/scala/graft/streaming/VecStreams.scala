@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -15,7 +13,8 @@ import graft.ops.Similarity
   * projection — IDENTICAL to the batch partition, so stream and batch
   * agree on which pairs are in contract), and per-bucket keyed state
   * retains member ids; each arrival emits a candidate pair with every
-  * retained bucket-mate, exactly once per bucket. Exact-cosine
+  * retained bucket-mate, exactly once per bucket (the
+  * [[DocStreams.pairInBucket]] fold). Exact-cosine
   * verification composes downstream — a re-join with the vector store,
   * batch or stream-static, exactly as in the batch x79 path.
   *
@@ -51,20 +50,10 @@ object VecStreams {
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (_: Long, rows: Iterator[(Long, Long)],
             state: GroupState[Seq[Long]]) =>
-          val seen = state.getOption.getOrElse(Seq.empty[Long]).toBuffer
-          val out = mutable.ArrayBuffer.empty[CandidatePair]
-          rows.foreach { case (id, _) =>
-            // re-deliveries and same-batch duplicates of an id emit
-            // nothing new: the bucket already reported its pairs
-            if (!seen.contains(id)) {
-              seen.foreach { s =>
-                out += CandidatePair(math.min(s, id), math.max(s, id))
-              }
-              if (seen.length < maxBucket) seen += id
-            }
-          }
-          state.update(seen.toSeq)
-          out.iterator
+          val (seen, out) = DocStreams.pairInBucket(
+            state.getOption.getOrElse(Seq.empty), rows.map(_._1), maxBucket)
+          state.update(seen)
+          out
       }
   }
 }

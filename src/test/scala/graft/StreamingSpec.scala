@@ -918,6 +918,57 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("bounded state: a history key idle for TWO horizons is removed " +
+      "and a returning user restarts at version 1 (sessionStatsOnline)") {
+    import java.sql.Timestamp
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Timestamp, Long, String, Double, String)](spark)
+    val events = ms.toDF()
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val q = EventStreams.sessionStatsOnline(events,
+        watermarkDelay = "1 minute",
+        idleTtlUs = 30L * 86400L * 1000000L)
+      .writeStream.outputMode("update")
+      .format("memory").queryName("stream_sess_idle").start()
+    def ev(id: Long, t: String, u: Long) =
+      (id, Timestamp.valueOf(t), u, "view", 1.0, "{}")
+    def stateRows(): Long =
+      q.lastProgress.stateOperators.head.numRowsTotal
+    try {
+      // batch 1: user 1 opens one 2-event, 30 s session (v1)
+      ms.addData(ev(1, "2024-01-05 10:00:00", 1L),
+        ev(2, "2024-01-05 10:00:30", 1L))
+      q.processAllAvailable()
+      // batches 2+3: user 2 far in the future moves the watermark past
+      // user 1's last event + TTL — the FIRST horizon: collapse, the
+      // key (and its version counter) stays
+      ms.addData(ev(10, "2024-07-25 10:00:00", 2L))
+      q.processAllAvailable()
+      ms.addData(ev(11, "2024-07-25 11:00:00", 2L))
+      q.processAllAvailable()
+      assert(stateRows() === 2L, "collapse must keep user 1's key")
+      // batches 4+5: the watermark passes the collapse + TTL — the
+      // SECOND horizon: user 1's key is removed outright
+      ms.addData(ev(20, "2024-12-01 10:00:00", 2L))
+      q.processAllAvailable()
+      ms.addData(ev(21, "2024-12-01 11:00:00", 2L))
+      q.processAllAvailable()
+      assert(stateRows() === 1L, "user 1's key must be removed")
+      // batch 6: user 1 returns with one event
+      ms.addData(ev(30, "2024-12-02 10:00:00", 1L))
+      q.processAllAvailable()
+      val rows = spark.table("stream_sess_idle")
+        .filter($"user_id" === 1L)
+        .as[(Long, Long, Long, Long, Long)].collect()
+      // a collapsed-but-kept key would publish version 2 here
+      assert(rows.map(_._2).max === 1L,
+        s"expected version restart at 1 after removal: ${rows.mkString(",")}")
+      assert(rows.map(r => (r._2, r._3, r._4, r._5)).toSet ===
+        Set((1L, 2L, 1L, 30000000L), (1L, 1L, 1L, 0L)),
+        s"pre-idle / post-return emissions wrong: ${rows.mkString(",")}")
+    } finally q.stop()
+  }
+
   test("streaming LSH candidates equal the batch generator, any batching") {
     val docs = Tables.load(spark, sf0001, "documents")
       .select($"doc_id", $"text").limit(120).cache()
@@ -1111,7 +1162,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStreams.dsirScores(
+    val q = graft.ops.Sampling.dsirScore(
         ms.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
       .writeStream
       .outputMode("append")
@@ -1145,7 +1196,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStreams.langIdScores(
+    val q = graft.ops.TextAnalysis.langIdScore(
         ms.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
       .writeStream
       .outputMode("append")
@@ -1179,7 +1230,7 @@ class StreamingSpec extends SparkSpec {
     val rows = corpus.as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStreams.blocklistFlags(
+    val q = graft.ops.TextAnalysis.blocklistFilter(
         ms.toDF().toDF("doc_id", "text"), "doc_id", "text", pats)
       .writeStream
       .outputMode("append")
@@ -1377,14 +1428,14 @@ class StreamingSpec extends SparkSpec {
           .when($"doc_id" % 5 === 1, concat(lit("- "), $"text"))
           .otherwise($"text").as("text"))
       .cache()
-    val expected = graft.streaming.DocStreams.gopherRules(
+    val expected = graft.ops.TextAnalysis.gopherRules(
         corpus, "doc_id", "text")
       .collect().map(_.toSeq).toSet
     val rows = corpus.as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
     val stream = ms.toDF().toDF("doc_id", "text")
-    val q = graft.streaming.DocStreams.gopherRules(stream, "doc_id", "text")
+    val q = graft.ops.TextAnalysis.gopherRules(stream, "doc_id", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_gopher").start()
     try {
@@ -1699,13 +1750,13 @@ class StreamingSpec extends SparkSpec {
           ($"doc_id" % 7).cast("string"),
           lit("?utm_source=a&id=1#f")).as("url"))
       .cache()
-    val expected = graft.streaming.DocStreams.domainGateFlags(
+    val expected = graft.ops.UrlCanon.domainBlocklistGate(
         corpus, "doc_id", "url", blocked)
       .as[(Long, String, Long, Option[String], Long)].collect().toSet
     val rows = corpus.as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStreams.domainGateFlags(
+    val q = graft.ops.UrlCanon.domainBlocklistGate(
         ms.toDF().toDF("doc_id", "url"), "doc_id", "url", blocked)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_domgate").start()
@@ -1733,13 +1784,13 @@ class StreamingSpec extends SparkSpec {
     val corpus = Tables.load(spark, sf0001, "documents")
       .filter($"text".isNotNull).limit(60)
       .select($"doc_id", $"text").cache()
-    val expected = graft.streaming.DocStreams.fimTransform(
+    val expected = graft.ops.DataPipeline.fimTransform(
         corpus, "doc_id", "text", 0.5)
       .as[(Long, Long, Long, Long, String, Long)].collect().toSet
     val rows = corpus.as[(Long, String)].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStreams.fimTransform(
+    val q = graft.ops.DataPipeline.fimTransform(
         ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 0.5)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_fim").start()
@@ -2041,7 +2092,7 @@ class StreamingSpec extends SparkSpec {
     // (c) twin equivalence: the stateless gopher gate assembled from
     // the partitioned stream (multi-batch append) equals its batch
     // form on the base table, row for row
-    val qGate = DocStreams.gopherRules(readTree(), "doc_id", "text")
+    val qGate = graft.ops.TextAnalysis.gopherRules(readTree(), "doc_id", "text")
       .writeStream.outputMode("append")
       .format("memory").queryName("hive_gopher").start()
     try {
