@@ -254,7 +254,7 @@ object SketchKernels {
     i = 0
     while (i < n) {
       if (vals(i) != null) {
-        while (tail > head && vals(dq(tail - 1)).compareTo(vals(i)) >= 0)
+        while (tail > head && vals(dq(tail - 1)).binaryCompare(vals(i)) >= 0)
           tail -= 1
         dq(tail) = i
         tail += 1

@@ -62,8 +62,10 @@ object VectorKernels {
     * arrays: a single allocation-free merge walk instead of two hash
     * sets per pair — ~2× on the all-pairs hot loop, where the kernel
     * runs once per candidate pair but sorting ran once per document.
-    * Ordering must be `UTF8String.compareTo` (what `array_sort`
-    * produces). Results are bit-identical to [[jaccard]].
+    * Ordering must be `UTF8String.binaryCompare`, unsigned-byte order
+    * (what `array_sort` produces); the walk calls it directly because
+    * `compareTo` checks the test-mode environment on every call before
+    * delegating to it. Results are bit-identical to [[jaccard]].
     */
   def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
     val na = a.numElements()
@@ -72,7 +74,7 @@ object VectorKernels {
     var j = 0
     var inter = 0
     while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      val c = a.getUTF8String(i).binaryCompare(b.getUTF8String(j))
       if (c == 0) { inter += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1

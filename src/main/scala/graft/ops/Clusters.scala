@@ -43,9 +43,13 @@ import org.apache.spark.sql.types._
   * unchanged sum means an unchanged labeling — one cheap aggregate
   * instead of a join against the previous labeling. The checkpoints are
   * LAZY (`localCheckpoint(eager = false)`), so the sum aggregate is the
-  * action that materializes each round's blocks: one job per round, not
-  * a materialize-job plus an aggregate-job. The sum is accumulated as
-  * DECIMAL(38,0) so it cannot overflow at any vertex count.
+  * action that materializes each round's blocks — one job per round
+  * with adaptive execution OFF. With AQE on (the session default),
+  * building each checkpoint already runs its upstream shuffle stages
+  * as jobs: ClustersSpec's 200-hop chain at `smallGraphThreshold = 0`
+  * (local[4], 4 shuffle partitions) runs 9 jobs per round, against 1
+  * with AQE off. The sum is accumulated as DECIMAL(38,0) so it cannot
+  * overflow at any vertex count.
   */
 object Clusters {
 
@@ -124,7 +128,8 @@ object Clusters {
     // symmetric closure; parallel edges collapse so each round's join
     // fan-out is bounded by the true degree
     // all checkpoints are lazy: the labelSum aggregate right after each
-    // one doubles as the materializing action (one job per round)
+    // one doubles as the materializing action (under AQE the upstream
+    // shuffle stages still run as their own jobs — see the note above)
     val edges = cp(
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())

@@ -42,9 +42,13 @@ object DataPipeline {
       minJaccard: Double = 0.9, blockCol: Column = lit(0),
       numHashes: Int = 64, bands: Int = 16,
       tokenize: Column => Column = TextAnalysis.tokens): DataFrame = {
-    // the tokenize-in-filter runs in the SCAN stage — rescue it from a
-    // sub-splittable single-file input (Parallelize.ensure; no-op at
-    // scale)
+    // Parallelize.ensure (no-op at scale) does NOT move the
+    // tokenize-in-filter: Catalyst pushes the gate filter below the
+    // round-robin exchange, so it still runs in the scan stage. What the
+    // exchange spreads over the session is everything above it — the
+    // exact-dedup partial aggregate and the token-set projection over
+    // the semi-join — which a single-file input would otherwise run as
+    // one task (StageGate audits that shape through x75).
     val gated = graft.ops.Parallelize.ensure(docs)
       .filter(col("text").isNotNull)
       .filter(size(tokenize(col("text"))).cast("long") >= minTokens)
@@ -122,11 +126,12 @@ object DataPipeline {
     * selection adds one component-keyed aggregate and one
     * component-keyed equi join, co-partitioned by the same key.
     *
-    * Contract: `qualityCol` must be non-null on every row (coalesce a
-    * nullable signal first) — an all-null component would select no
-    * representative and its rows would drop at the inner join. `idCol`
-    * must be an integral type (the argmax folds it through bitwise
-    * NOT).
+    * Nulls: a null `qualityCol` ranks below every non-null quality
+    * (struct ordering puts a null field first), so an all-null
+    * component keeps its minimum id as representative and no row
+    * drops; coalesce a nullable signal first if null should rank
+    * otherwise (DataPipelineSpec pins this). `idCol` must be an
+    * integral type (the argmax folds it through bitwise NOT).
     *
     * Returns `(idCol, component, qualityCol, rep_id, keep)` —
     * `keep` ∈ {0,1}, exactly one keep=1 per component.

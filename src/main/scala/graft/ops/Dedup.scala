@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.HashFunctions.{minhashSig, simhash64}
+import graft.functions.VectorFunctions.{setJaccardSorted, sigAgreement}
 
 /** Deduplication operators for the LLM-pipeline north star.
   *
@@ -66,36 +67,17 @@ object Dedup {
     // both self-join sides inherit the input's scan partitioning; on a
     // sub-splittable single file the streamed probe side (pair
     // generation + the per-pair intersect kernel) would run as ONE
-    // task (Parallelize.ensure; no-op at scale)
-    val src = Parallelize.ensure(docs)
-    val a = src.select(col(idCol).as("a_id"), col(blockCol).as("block"),
-      col(setCol).as("a_set"))
-    val b = src.select(col(idCol).as("b_id"), col(blockCol).as("block"),
-      col(setCol).as("b_set"))
-    a.join(b, Seq("block"))
-      .filter(col("a_id") < col("b_id"))
+    // task (Parallelize.ensure; no-op at scale). Project first, in
+    // bucketJoin's (id, keys, carry) order: its side renames then fold
+    // into this projection below the repartition.
+    val src = Parallelize.ensure(docs.select(col(idCol).as("id"),
+      col(blockCol).as("block"), col(setCol).as("set")))
+    BandJoin.bucketJoin(src, src, Seq("block"), Seq("set"))
       .select(col("a_id"), col("b_id"),
-        graft.functions.VectorFunctions.setJaccardSorted(
-          col("a_set"), col("b_set")).as("jaccard"))
+        setJaccardSorted(col("a_set"), col("b_set")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** MinHash + LSH near-dedup candidates.
-    *
-    * Pipeline: tokens → MinHash signature (single-pass native expression)
-    * → split into `bands` bands of `rowsPerBand` → explode → shuffle on
-    * (band_id, band_hash) → self-join within buckets → estimate
-    * similarity as the fraction of equal signature components.
-    *
-    * Probability a pair with Jaccard j becomes a candidate:
-    * 1 - (1 - j^rowsPerBand)^bands — the standard LSH S-curve.
-    */
-  /** Distinct LSH candidate pairs `(a_id, b_id)` — the shared bucketed
-    * generator. The bucket-join carries ids ONLY (16 bytes/row); the
-    * naive formulation would carry both 64-long signatures through the
-    * bucket join — ~60× more shuffle bytes and a per-band duplicate of
-    * every pair's downstream computation.
-    */
   /** Per-document `(id, block, band_id, band_hash)` bucket keys — the
     * stateless projection shared by the batch generator below and the
     * streaming detector (`graft.streaming.DocStreams.nearDupCandidates`):
@@ -123,6 +105,17 @@ object Dedup {
         col("band.band_id"), col("band.band_hash"))
   }
 
+  /** Distinct MinHash-LSH candidate pairs `(a_id, b_id)` — the shared
+    * bucketed generator: tokens → MinHash signature (single-pass native
+    * expression) → `bands` bands of `numHashes / bands` rows → explode →
+    * shuffle on (block, band_id, band_hash) → self-join within buckets.
+    * A pair with Jaccard j becomes a candidate with probability
+    * 1 - (1 - j^rowsPerBand)^bands — the standard LSH S-curve.
+    *
+    * The bucket-join carries ids ONLY (16 bytes/row); carrying both
+    * 64-long signatures would move ~60× more shuffle bytes and
+    * duplicate every pair's downstream computation per band.
+    */
   def lshCandidatePairs(docs: DataFrame, idCol: String, tokenSetCol: String,
       numHashes: Int = 64, bands: Int = 16,
       blockCol: Column = lit(0)): DataFrame = {
@@ -135,12 +128,7 @@ object Dedup {
     // dominates this family (r20 per-stage CPU audit).
     val banded = bandedSignatures(docs, idCol, tokenSetCol, numHashes,
       bands, blockCol)
-    val a = banded.select(col("block"), col("band_id"), col("band_hash"),
-      col("id").as("a_id"))
-    val bb = banded.select(col("block"), col("band_id"), col("band_hash"),
-      col("id").as("b_id"))
-    a.join(bb, Seq("block", "band_id", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
+    BandJoin.bucketJoin(banded, banded, Seq("block", "band_id", "band_hash"))
       .select(col("a_id"), col("b_id"))
       .distinct()
   }
@@ -206,16 +194,12 @@ object Dedup {
         }: _*)).as("b"))
       .select(col("id"), col("block"), col("sig"),
         col("b.band_id"), col("b.band_key"))
-    val a = banded.select(col("block"), col("band_id"), col("band_key"),
-      col("id").as("a_id"), col("sig").as("a_sig"))
-    val bb = banded.select(col("block"), col("band_id"), col("band_key"),
-      col("id").as("b_id"), col("sig").as("b_sig"))
     val est = (0 until k).map(i =>
         when(col("a_sig").getItem(i) === col("b_sig").getItem(i), 1)
           .otherwise(0))
       .reduce(_ + _).cast(DoubleType) / k
-    a.join(bb, Seq("block", "band_id", "band_key"))
-      .filter(col("a_id") < col("b_id"))
+    BandJoin.bucketJoin(banded, banded, Seq("block", "band_id", "band_key"),
+        Seq("sig"))
       .select(col("a_id"), col("b_id"), est.as("est"))
       .filter(col("est") >= minEst)
       .distinct()
@@ -654,13 +638,9 @@ object Dedup {
     // re-join the two signatures once per unique candidate pair; the
     // estimator is a codegen kernel (one flat loop per pair), not the
     // triple-lambda zip_with/filter/size HOF spelling
-    lshCandidatePairs(docs, idCol, tokenSetCol, numHashes, bands, blockCol)
-      .join(sigs.select(col("id").as("a_id"), col("sig").as("a_sig")), "a_id")
-      .join(sigs.select(col("id").as("b_id"), col("sig").as("b_sig")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        graft.functions.VectorFunctions.sigAgreement(
-          col("a_sig"), col("b_sig")).as("est_sim"))
-      .filter(col("est_sim") >= minEstSim)
+    BandJoin.verify(
+      lshCandidatePairs(docs, idCol, tokenSetCol, numHashes, bands, blockCol),
+      sigs, sigs, "sig", sigAgreement, "est_sim", minEstSim)
   }
 
   /** The documented 100 TB near-dup path: MinHash-LSH generates the
@@ -679,16 +659,10 @@ object Dedup {
       blockCol: Column = lit(0)): DataFrame = {
     // candidates only (no signature estimate: exact verification follows
     // anyway, so the 64-long sig re-join would be pure waste)
-    val candidates = lshCandidatePairs(
-      docs, idCol, tokenSetCol, numHashes, bands, blockCol)
     val toks = docs.select(col(idCol).as("id"), col(tokenSetCol).as("tok"))
-    candidates
-      .join(toks.select(col("id").as("a_id"), col("tok").as("a_set")), "a_id")
-      .join(toks.select(col("id").as("b_id"), col("tok").as("b_set")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        graft.functions.VectorFunctions.setJaccardSorted(
-          col("a_set"), col("b_set")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    BandJoin.verify(
+      lshCandidatePairs(docs, idCol, tokenSetCol, numHashes, bands, blockCol),
+      toks, toks, "tok", setJaccardSorted, "jaccard", minJaccard)
   }
 
   /** Per-document top-k nearest near-duplicates — the dedup REVIEW
@@ -752,31 +726,20 @@ object Dedup {
       idCol: String, tokenSetCol: String, minJaccard: Double,
       numHashes: Int = 64, bands: Int = 16,
       blockCol: Column = lit(0)): DataFrame = {
-    val nb = bandedSignatures(newDocs, idCol, tokenSetCol, numHashes,
-      bands, blockCol)
-    val sb = bandedSignatures(seen, idCol, tokenSetCol, numHashes,
-      bands, blockCol)
-    val candidates = nb
-      .select(col("block"), col("band_id"), col("band_hash"),
-        col("id").as("new_id"))
-      .join(sb.select(col("block"), col("band_id"), col("band_hash"),
-        col("id").as("seen_id")),
-        Seq("block", "band_id", "band_hash"))
-      // the sides are disjoint by contract (a doc is either arriving or
-      // ingested); if a caller violates it, a document must still never
-      // pair with itself
-      .filter(col("new_id") =!= col("seen_id"))
+    def banded(df: DataFrame) = bandedSignatures(df, idCol, tokenSetCol,
+      numHashes, bands, blockCol)
+    def toks(df: DataFrame) =
+      df.select(col(idCol).as("id"), col(tokenSetCol).as("tok"))
+    val ids = ("new_id", "seen_id")
+    // the sides are disjoint by contract (a doc is either arriving or
+    // ingested); if a caller violates it, a document must still never
+    // pair with itself
+    val candidates = BandJoin.bucketJoin(banded(newDocs), banded(seen),
+        Seq("block", "band_id", "band_hash"), ids = ids, keep = _ =!= _)
       .select(col("new_id"), col("seen_id"))
       .distinct()
-    candidates
-      .join(newDocs.select(col(idCol).as("new_id"),
-        col(tokenSetCol).as("_na")), "new_id")
-      .join(seen.select(col(idCol).as("seen_id"),
-        col(tokenSetCol).as("_sa")), "seen_id")
-      .select(col("new_id"), col("seen_id"),
-        graft.functions.VectorFunctions.setJaccardSorted(
-          col("_na"), col("_sa")).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    BandJoin.verify(candidates, toks(newDocs), toks(seen), "tok",
+      setJaccardSorted, "jaccard", minJaccard, ids)
   }
 
   /** SimHash near-dedup: 64-bit signature per document; candidates share
@@ -795,44 +758,12 @@ object Dedup {
     * WWW'07 use the same 64-bit fingerprint, d≈3 regime).
     */
   def simhashPairs(docs: DataFrame, idCol: String, tokensCol: String,
-      maxHamming: Int, numChunks: Int = 4): DataFrame = {
-    require(64 % numChunks == 0, "numChunks must divide 64")
-    require(maxHamming < numChunks,
-      s"pigeonhole recall guarantee needs maxHamming < numChunks " +
-        s"(got maxHamming=$maxHamming, numChunks=$numChunks): a pair at " +
-        s"distance >= numChunks can differ in every chunk and be missed")
-    val width = 64 / numChunks
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    val sigs = docs.select(col(idCol).as("id"),
-      simhash64(col(tokensCol)).as("sig"))
-    val chunkStructs = (0 until numChunks).map { j =>
-      struct(lit(j).as("chunk_id"),
-        shiftright(col("sig"), j * width).bitwiseAND(lit(mask))
-          .as("chunk_val"))
-    }
+      maxHamming: Int, numChunks: Int = 4): DataFrame =
     // lazy barrier (r20, the lshCandidatePairs fold): the chunk-bucket
-    // self-join consumes `chunked` on both sides — without it each
-    // side re-runs the SimHash kernel over the corpus.
-    val chunked = sigs.select(col("id"), col("sig"),
-        explode(array(chunkStructs: _*)).as("c"))
-      .select(col("id"), col("sig"), col("c.chunk_id"), col("c.chunk_val"))
-      .localCheckpoint(eager = false)
-    val a = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("a_id"), col("sig").as("a_sig"))
-    val b = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("b_id"), col("sig").as("b_sig"))
-    a.join(b, Seq("chunk_id", "chunk_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_sig").bitwiseXOR(col("b_sig"))).cast(LongType)
-          .as("hamming"))
-      // filter BEFORE the distinct: hamming is functionally determined
-      // by the pair, so the order is equivalence-preserving, and the
-      // dedup shuffle shrinks from every banded candidate to just the
-      // matches (~200x on the clustered sf0.1 signatures)
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("a_id", "b_id")
-  }
+    // self-join consumes the chunked frame on both sides — without it
+    // each side re-runs the SimHash kernel over the corpus.
+    BandJoin.hammingPairs(docs, idCol, simhash64(col(tokensCol)), 64,
+      numChunks, maxHamming, checkpoint = true)
 
   /** PORTABLE twin of [[simhashPairs]] (the x43 pattern): a 32-bit
     * SimHash whose per-token votes are the high bits of the md5 hex
@@ -846,39 +777,9 @@ object Dedup {
     */
   def portableSimhashPairs(docs: DataFrame, idCol: String,
       tokensCol: String, maxHamming: Int,
-      numChunks: Int = 4): DataFrame = {
-    require(32 % numChunks == 0, "numChunks must divide 32")
-    require(maxHamming < numChunks,
-      "pigeonhole recall guarantee needs maxHamming < numChunks")
-    val width = 32 / numChunks
-    val mask = (1L << width) - 1L
-    val sigs = docs.select(col(idCol).as("id"),
-      graft.functions.PortableMinHashFunctions
-        .portableSimhash32(col(tokensCol)).as("sig"))
-    val chunkStructs = (0 until numChunks).map { j =>
-      struct(lit(j).as("chunk_id"),
-        shiftright(col("sig"), j * width).bitwiseAND(lit(mask))
-          .as("chunk_val"))
-    }
-    // lazy barrier (r20): same self-join fold as [[simhashPairs]].
-    val chunked = sigs.select(col("id"), col("sig"),
-        explode(array(chunkStructs: _*)).as("c"))
-      .select(col("id"), col("sig"), col("c.chunk_id"), col("c.chunk_val"))
-      .localCheckpoint(eager = false)
-    val a = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("a_id"), col("sig").as("a_sig"))
-    val b = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("b_id"), col("sig").as("b_sig"))
-    a.join(b, Seq("chunk_id", "chunk_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_sig").bitwiseXOR(col("b_sig"))).cast(LongType)
-          .as("hamming"))
-      // filter BEFORE the distinct: hamming is functionally determined
-      // by the pair, so the order is equivalence-preserving, and the
-      // dedup shuffle shrinks from every banded candidate to just the
-      // matches (~200x on the clustered sf0.1 signatures)
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("a_id", "b_id")
-  }
+      numChunks: Int = 4): DataFrame =
+    // lazy barrier (r20): same self-join fold as [[simhashPairs]]
+    BandJoin.hammingPairs(docs, idCol, graft.functions
+        .PortableMinHashFunctions.portableSimhash32(col(tokensCol)), 32,
+      numChunks, maxHamming, checkpoint = true)
 }

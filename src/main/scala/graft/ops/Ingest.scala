@@ -145,6 +145,11 @@ object Ingest {
     * the new `source=src19` directory. Performs the full declared
     * ingest — dedup, append, fresh directory — on EVERY call; nothing
     * is cached across invocations (see the protocol note above).
+    *
+    * At most one appended tree per JVM is live: each call (of this,
+    * [[appendedTree]] or their pair-frame variants) deletes the tree
+    * the previous call returned, and JVM shutdown deletes the last one.
+    * Finish reading a returned path before the next call.
     */
   def appendedTreePath(spark: SparkSession, dir: String): String =
     appendedTreePathFrom(spark, dir, crossIngestPairs(spark, dir))
@@ -157,12 +162,14 @@ object Ingest {
     cleanupInstalled
     lastRunDir.foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
-    lastRunDir = None
     val src = Paths.get(PartitionedTables.docsBySourcePath(spark, dir))
     val run = Paths.get(ingestRoot,
       s"${ProcessHandle.current().pid()}_run" +
         s"${runCounter.incrementAndGet()}")
     Files.createDirectories(run)
+    // recorded before anything can fail, so a failed write's tree is
+    // still deleted by the next call or the shutdown hook
+    lastRunDir = Some(run)
     Files.list(src).iterator().asScala.toSeq.foreach { p =>
       if (p.getFileName.toString != s"source=$ArrivingSource")
         Files.createSymbolicLink(run.resolve(p.getFileName.toString), p)
@@ -174,14 +181,15 @@ object Ingest {
       .join(broadcast(dupIds), Seq("doc_id"), "left_anti")
     kept.drop("source").write
       .parquet(run.resolve(s"source=$ArrivingSource").toString)
-    lastRunDir = Some(run)
     run.toString
   }
 
   /** The appended tree read back through hive partition discovery —
     * the end-to-end round trip (dedup decisions + directory append +
     * partition-column re-inference) whose scan x210 hash-checks
-    * against a base-table oracle.
+    * against a base-table oracle. The frame reads the tree in place,
+    * so it is valid only until the next append call deletes that tree
+    * (the at-most-one-live-tree contract of [[appendedTreePath]]).
     */
   def appendedTree(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(appendedTreePath(spark, dir))

@@ -49,12 +49,9 @@ object Similarity {
   /** Brute-force near-duplicate pairs within a blocking key. */
   def cosinePairs(vectors: DataFrame, idCol: String, vecCol: String,
       blockCol: Column, minCosine: Double): DataFrame = {
-    val base = vectors.select(col(idCol).as("_id"), blockCol.as("_block"),
-      toDouble(col(vecCol)).as("_v"))
-    val a = base.select(col("_id").as("a_id"), col("_block"), col("_v").as("a_v"))
-    val b = base.select(col("_id").as("b_id"), col("_block"), col("_v").as("b_v"))
-    a.join(b, Seq("_block"))
-      .filter(col("a_id") < col("b_id"))
+    val base = vectors.select(col(idCol).as("id"), blockCol.as("block"),
+      toDouble(col(vecCol)).as("v"))
+    BandJoin.bucketJoin(base, base, Seq("block"), Seq("v"))
       .select(col("a_id"), col("b_id"),
         cosine(col("a_v"), col("b_v")).as("cos"))
       .filter(col("cos") >= minCosine)
@@ -76,35 +73,16 @@ object Similarity {
   def signLshPairs(vectors: DataFrame, idCol: String, vecCol: String,
       minCosine: Double, bands: Int = 8, seed: Long = 42L,
       blockCol: Column = lit(0)): DataFrame = {
-    require(64 % bands == 0, "bands must divide 64")
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1L
     val base = vectors.select(col(idCol).as("id"), blockCol.as("block"),
       toDouble(col(vecCol)).as("v"))
-    val sigs = base.select(col("id"), col("block"),
-      graft.functions.VectorFunctions.srpSignature(col("v"), seed).as("sig"))
-    val chunkStructs = (0 until bands).map { j =>
-      struct(lit(j).as("band_id"),
-        shiftright(col("sig"), j * width).bitwiseAND(lit(mask))
-          .as("band_val"))
-    }
-    val chunked = sigs.select(col("id"), col("block"),
-        explode(array(chunkStructs: _*)).as("c"))
-      .select(col("id"), col("block"), col("c.band_id"), col("c.band_val"))
-    val a = chunked.select(col("block"), col("band_id"), col("band_val"),
-      col("id").as("a_id"))
-    val b = chunked.select(col("block"), col("band_id"), col("band_val"),
-      col("id").as("b_id"))
-    val candidates = a.join(b, Seq("block", "band_id", "band_val"))
-      .filter(col("a_id") < col("b_id"))
+    val chunked = BandJoin.chunkBands(base.select(col("id"), col("block"),
+        graft.functions.VectorFunctions.srpSignature(col("v"), seed)
+          .as("sig")), Seq("id", "block"), 64, bands)
+    val candidates = BandJoin.bucketJoin(chunked, chunked,
+        Seq("block", "band_id", "band_val"))
       .select(col("a_id"), col("b_id"))
       .distinct()
-    candidates
-      .join(base.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
-      .join(base.select(col("id").as("b_id"), col("v").as("b_v")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        cosine(col("a_v"), col("b_v")).as("cos"))
-      .filter(col("cos") >= minCosine)
+    BandJoin.verify(candidates, base, base, "v", cosine, "cos", minCosine)
       .select(col("a_id"), col("b_id"), round(col("cos"), 3).as("sim"))
   }
 
@@ -729,45 +707,23 @@ object Similarity {
   def portableSrpPairs(vectors: DataFrame, idCol: String, vecCol: String,
       maxHamming: Int, bits: Int = 32, numChunks: Int = 4,
       dim: Int = 64): DataFrame = {
-    require(bits % numChunks == 0, "numChunks must divide bits")
     require(bits <= 63, "bits must fit a long")
-    require(maxHamming < numChunks,
-      "pigeonhole recall guarantee needs maxHamming < numChunks")
-    val width = bits / numChunks
-    val mask = (1L << width) - 1L
-    val qv = vectors.select(col(idCol).as("id"),
-      transform(col(vecCol), x =>
-        floor(x.cast(DoubleType) * lit(1000)).cast(LongType)).as("qv"))
     // signature = one codegen kernel pass (PortableSrpKernel, weights
     // from portableSrpWeight's derivation) — the HOF spelling costs
-    // bits×dim interpreted lambdas per row, per join side
-    val sigs = qv.select(col("id"), graft.functions
-      .PortableMinHashFunctions.portableSrpSig(col("qv"), bits, dim)
-      .as("sig"))
-    val chunkStructs = (0 until numChunks).map { j =>
-      struct(lit(j).as("chunk_id"),
-        shiftright(col("sig"), j * width).bitwiseAND(lit(mask))
-          .as("chunk_val"))
-    }
-    val chunked = sigs.select(col("id"), col("sig"),
-        explode(array(chunkStructs: _*)).as("c"))
-      .select(col("id"), col("sig"), col("c.chunk_id"), col("c.chunk_val"))
-    val a = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("a_id"), col("sig").as("a_sig"))
-    val b = chunked.select(col("chunk_id"), col("chunk_val"),
-      col("id").as("b_id"), col("sig").as("b_sig"))
-    a.join(b, Seq("chunk_id", "chunk_val"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_sig").bitwiseXOR(col("b_sig"))).cast(LongType)
-          .as("hamming"))
-      // filter BEFORE the distinct: hamming is functionally determined
-      // by the pair, so the order is equivalence-preserving, and the
-      // dedup shuffle shrinks from every banded candidate to just the
-      // matches (~200x on the clustered sf0.1 signatures)
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("a_id", "b_id")
+    // bits×dim interpreted lambdas per row, per join side. Unlike the
+    // SimHash twins, no barrier on the chunked frame.
+    BandJoin.hammingPairs(vectors, idCol, portableSrpSig(col(vecCol), bits,
+      dim), bits, numChunks, maxHamming, checkpoint = false)
   }
+
+  /** The portable SRP signature of a vector column: [[portableSrpWeight]]
+    * votes over the `floor(double(x) * 1000)`-quantized elements.
+    */
+  private def portableSrpSig(vecCol: Column, bits: Int, dim: Int): Column =
+    graft.functions.PortableMinHashFunctions.portableSrpSig(
+      transform(vecCol, x =>
+        floor(x.cast(DoubleType) * lit(1000)).cast(LongType)),
+      bits, dim)
 
   /** SemDeDup-style semantic deduplication: partition the embedding
     * space into LSH buckets (the top `bucketBits` bits of the portable
@@ -804,10 +760,7 @@ object Similarity {
     require(bucketBits >= 1 && bucketBits <= bits,
       s"need 1 <= bucketBits <= $bits, got $bucketBits")
     require(bits <= 63, "bits must fit a long")
-    shiftright(graft.functions.PortableMinHashFunctions.portableSrpSig(
-      transform(vecCol, x =>
-        floor(x.cast(DoubleType) * lit(1000)).cast(LongType)),
-      bits, dim), bits - bucketBits)
+    shiftright(portableSrpSig(vecCol, bits, dim), bits - bucketBits)
   }
 
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,

@@ -164,6 +164,21 @@ class DataPipelineSpec extends SparkSpec {
     }
   }
 
+  test("clusterRepresentatives: an all-null-quality component keeps its " +
+      "minimum id, and a null quality loses to any non-null one") {
+    val docs = Seq[(Long, Option[Long])](
+      (30L, None), (31L, None), (32L, None), // all null -> rep 30
+      (40L, None), (41L, Some(1L))           // null loses -> rep 41
+    ).toDF("doc_id", "q")
+    val pairs = Seq((31L, 30L), (32L, 31L), (40L, 41L)).toDF("a_id", "b_id")
+    val out = DataPipeline.clusterRepresentatives(
+        docs, "doc_id", pairs, "a_id", "b_id", "q")
+      .select($"doc_id", $"rep_id", $"keep").as[(Long, Long, Long)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(out === Map(30L -> (30L, 1L), 31L -> (30L, 0L),
+      32L -> (30L, 0L), 40L -> (41L, 0L), 41L -> (41L, 1L)))
+  }
+
   test("fimTransform: PSM splice is losslessly invertible and the " +
       "coin/cuts are deterministic") {
     val docs = Tables.load(spark, sf0001, "documents")

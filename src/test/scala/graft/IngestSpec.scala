@@ -108,4 +108,22 @@ class IngestSpec extends SparkSpec {
         .get(p2, s"source=${Ingest.ArrivingSource}")),
       "fresh run tree missing its arriving partition")
   }
+
+  test("a write that fails part-way leaves no orphaned run tree: the " +
+      "next call deletes it") {
+    val boom = udf((id: Long) => {
+      if (id >= 0L) throw new IllegalStateException("injected pair failure")
+      id
+    })
+    val failing = spark.range(1).select(boom(col("id")).as("new_id"))
+    intercept[Exception] {
+      Ingest.appendedTreePathFrom(spark, sf0001, failing)
+    }
+    val kept = java.nio.file.Paths.get(Ingest.appendedTreePath(spark, sf0001))
+    val prefix = s"${ProcessHandle.current().pid()}_run"
+    val runs = kept.getParent.toFile.listFiles().map(_.getName)
+      .filter(_.startsWith(prefix))
+    assert(runs.toSeq == Seq(kept.getFileName.toString),
+      s"run trees left by this JVM: ${runs.mkString(", ")}")
+  }
 }

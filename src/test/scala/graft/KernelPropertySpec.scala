@@ -32,6 +32,29 @@ class KernelPropertySpec extends SparkSpec {
       val viaMerge = VectorKernels.jaccardSorted(arr(sa), arr(sb))
       assert(viaHash === viaMerge, s"seed=$seed a=$sa b=$sb")
     }
+    // multi-byte UTF-8 tokens at skewed lengths (1-3 tokens against
+    // ~2,000): the walk must follow array_sort's unsigned-byte order,
+    // which differs from String's UTF-16 order once supplementary
+    // characters meet high-BMP ones
+    val alphabet = Vector("a", "z", "\u00e9", "\u00df", "\u0436",
+      "\u4e2d", "\uff21", "\ud83d\ude00", "\ud834\udd1e")
+    def byteSorted(xs: Seq[String]): Seq[String] = xs.distinct.sortWith(
+      (x, y) => UTF8String.fromString(x)
+        .binaryCompare(UTF8String.fromString(y)) < 0)
+    (1 to 60).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def token(): String = Seq.fill(1 + rnd.nextInt(4))(
+        alphabet(rnd.nextInt(alphabet.size))).mkString
+      val big = byteSorted(Seq.fill(2000)(token()))
+      // half the short side comes from the long side, so most pairs
+      // intersect
+      val small = byteSorted(Seq.fill(1 + rnd.nextInt(3))(
+        if (rnd.nextBoolean()) big(rnd.nextInt(big.size)) else token()))
+      val (sa, sb) = if (seed % 2 == 0) (small, big) else (big, small)
+      val viaHash = VectorKernels.jaccard(arr(sa), arr(sb))
+      val viaMerge = VectorKernels.jaccardSorted(arr(sa), arr(sb))
+      assert(viaHash === viaMerge, s"seed=$seed short side=$small")
+    }
   }
 
   test("ngramHashes: window identity, cardinality vs string grams, clipping") {

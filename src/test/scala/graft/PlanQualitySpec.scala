@@ -589,6 +589,45 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("LSH pair family: finalized plans keep their exchange, reused-" +
+      "exchange and broadcast-join counts (sf0.01)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object Walk extends AdaptiveSparkPlanHelper
+    // (Exchange, ReusedExchange, BroadcastHashJoin) nodes of each
+    // query's finalized adaptive plan, recorded before the pair
+    // generators moved onto the shared band-join steps: the shared
+    // spelling must plan exactly as the hand-written one did
+    val expected = Map(
+      "x5_jaccard_pairs" -> (2, 1, 1),
+      "x6_cosine_pairs" -> (1, 0, 1),
+      "x8_minhash_lsh" -> (3, 2, 3),
+      "x9_simhash" -> (2, 0, 1),
+      "x12_neardup_pairs" -> (3, 2, 3),
+      "x15_sign_lsh_pairs" -> (2, 1, 3),
+      "x29_shingle_jaccard" -> (2, 1, 1),
+      "x43_portable_minhash" -> (3, 1, 1),
+      "x59_incremental_neardup" -> (4, 0, 3),
+      "x71_portable_simhash" -> (2, 0, 1),
+      "x72_portable_srp" -> (2, 0, 1))
+    val got = expected.keys.map { name =>
+      val df = SparkEntry.queries(name)(spark, sf001)
+      spark.sparkContext.runJob(df.queryExecution.toRdd,
+        (it: Iterator[InternalRow]) => { while (it.hasNext) it.next(); () })
+      val plan = df.queryExecution.executedPlan
+      name -> (
+        Walk.collect(plan) { case e: ShuffleExchangeExec => e }.size,
+        Walk.collect(plan) { case e: ReusedExchangeExec => e }.size,
+        Walk.collect(plan) { case j: BroadcastHashJoinExec => j }.size)
+    }.toMap
+    val diff = expected.keys.toSeq.sorted.filter(n => got(n) != expected(n))
+    if (diff.nonEmpty) fail(diff.map(n =>
+      s"$n: expected ${expected(n)}, got ${got(n)}").mkString("\n"))
+  }
+
   test("no declared query plans an unpartitioned window or cartesian product") {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val df = fn(spark, sf0001)
